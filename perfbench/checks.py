@@ -3,16 +3,18 @@ and properties the methods must have. Never a stored copy of an output.
 
 `check(workload, ...)` returns {operation: (ok, message)}.
 """
-import decimal
 import hashlib
 import json
-import math
 import os
+import sys
 from collections import defaultdict
 from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 import numpy as np
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+from check import compare  # noqa: E402 - the repo's oracle gate, so both compare alike
 
 TABLES = ("events", "documents", "embeddings")
 
@@ -22,32 +24,12 @@ SHIFT_TOL_H = 6
 SHIFT_SHARE = {"q_bocpd": 0.9, "q_pelt": 0.9, "q_cusum": 0.9}
 IVF_RECALL_AT_3 = 0.8
 ORACLE_SAMPLE_SERIES = 1
-# These oracles replay a whole recursion as a recursive CTE (8-10 s each in
-# DuckDB on one series), longer than a run's timed rounds. Untraced runs
-# check these operators by recomputation and planted properties only;
-# traced runs also compare them with their oracles.
+# These oracles replay a whole recursion as a recursive CTE in DuckDB (28 s
+# per fleet run on one series with the three in parallel on a 4-vCPU host),
+# which the run budget of the untraced runs cannot hold. Untraced runs check
+# these operators by an independent numeric recomputation of every series
+# and by planted properties; traced runs also compare them with their oracles.
 SLOW_ORACLES = {"q_bocpd", "q_pelt", "q_holtwinters"}
-
-
-def _norm(rows):
-    """check.py's hash-strict normal form: 6-dp floats, type-tagged, sorted."""
-    out = []
-    for r in rows:
-        rr = []
-        for v in r:
-            if isinstance(v, float):
-                rr.append("f:NaN" if math.isnan(v) else "f:" + repr(round(v, 6)))
-            elif isinstance(v, bool):
-                rr.append("b:" + repr(v))
-            elif isinstance(v, int):
-                rr.append("i:" + repr(v))
-            elif isinstance(v, decimal.Decimal):
-                rr.append("f:" + repr(round(float(v), 6)))
-            else:
-                rr.append("o:" + str(v))
-        out.append(tuple(rr))
-    out.sort()
-    return out
 
 
 def _con(in_dir, series=None):
@@ -62,39 +44,12 @@ def _con(in_dir, series=None):
     return con
 
 
-def oracle_compare(con, sql, out_dir, name, series=None):
-    """Rows, schema and 6-dp hash against the DuckDB oracle, as tools/check.py
-    compares; with `series`, the Spark output is restricted to those series."""
-    try:
-        want_rel = con.sql(sql)
-        want_cols, want_types, want = want_rel.columns, [str(t) for t in want_rel.types], want_rel.fetchall()
-    except Exception as e:  # noqa: BLE001 - the oracle's own failure is a failed check
-        return False, f"oracle error: {e}"
-    try:
-        got_rel = con.sql(f"SELECT * FROM read_parquet('{out_dir}/outputs/{name}/*.parquet')")
-    except duckdb.Error as e:
-        return False, f"spark output missing: {e}"
-    got_cols = got_rel.columns
-    if series is not None and "event_type" in got_cols:
-        keep = ", ".join("'" + s + "'" for s in series)
-        got_rel = con.sql(f"SELECT * FROM read_parquet('{out_dir}/outputs/{name}/*.parquet') "
-                          f"WHERE event_type IN ({keep})")
-    got = got_rel.fetchall()
-    if sorted(want_cols) != sorted(got_cols):
-        return False, f"columns differ: oracle={sorted(want_cols)} spark={sorted(got_cols)}"
-    if any("HUGEINT" in t for t in want_types):
-        return False, "oracle emits int128"
-    if len(want) != len(got):
-        return False, f"rows oracle={len(want)} spark={len(got)}"
-    wi = sorted(range(len(want_cols)), key=lambda i: want_cols[i])
-    gi = sorted(range(len(got_cols)), key=lambda i: got_cols[i])
-    w = _norm([tuple(r[i] for i in wi) for r in want])
-    g = _norm([tuple(r[i] for i in gi) for r in got])
-    if w != g:
-        sg = set(g)
-        diff = [r for r in w if r not in sg][:2]
-        return False, f"hash differs; oracle-only rows {diff}"
-    return True, f"{len(got)} rows match the oracle"
+def oracle_compare(con, sql, out_dir, name):
+    """Rows, schema and 6-dp hash against the DuckDB oracle: the repo's own
+    gate, tools/check.py, makes the compare."""
+    rec = compare(con, name, sql, out_dir)
+    ok = rec["rows_match"] and rec["schema_match"] and rec["hash_match"]
+    return ok, f"{rec['spark_rows']} rows match the oracle" if ok else rec["err"]
 
 
 def _out(con, out_dir, name):
@@ -107,12 +62,25 @@ def _merge(verdicts, name, ok, msg):
 
 
 def check_oracles(in_dir, out_dir, series=None, skip=()):
+    """Every operation's oracle. With `series`, the oracle sees only the
+    events of those series, and the Spark output, computed on all of them,
+    is cut to the same series before the compare."""
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         oracle = json.load(f)
     todo = sorted((n, q) for n, q in oracle.items() if n not in skip)
+    got_dir = os.path.join(out_dir, "outputs")
+    if series is not None:
+        got_dir, con = os.path.join(out_dir, "sample"), duckdb.connect()
+        keep = ", ".join("'" + s + "'" for s in series)
+        for name, _ in todo:
+            os.makedirs(os.path.join(got_dir, name), exist_ok=True)
+            got = _out(con, out_dir, name)
+            cut = f"WHERE event_type IN ({keep})" if "event_type" in got.columns else ""
+            con.execute(f"COPY (SELECT * FROM read_parquet('{out_dir}/outputs/{name}/*.parquet') {cut}) "
+                        f"TO '{got_dir}/{name}/part-0.parquet' (FORMAT parquet)")
 
     def one(item):
-        return item[0], oracle_compare(_con(in_dir, series), item[1], out_dir, item[0], series)
+        return item[0], oracle_compare(_con(in_dir, series), item[1], got_dir, item[0])
     # one connection per oracle, a few at a time: the recursive-CTE oracles
     # run mostly single-threaded, and DuckDB releases the GIL while it runs
     with ThreadPoolExecutor(max_workers=4) as pool:
@@ -167,8 +135,86 @@ def _holt_winters(xs, m=24, alpha=0.3, beta=0.05, gamma=0.1):
     return level, trend, f(1), f(24)
 
 
+def _bocpd(X, hazard=0.01, lag=10):
+    """Adams-MacKay run-length posterior with a Normal unknown-mean model,
+    one series per row: segment-mean prior from the series' mean and
+    variance, noise variance from its first differences. Returns the lagged
+    change probability P(r_{t+lag} = lag) at t, 0 at the first and last
+    `lag` points."""
+    S, n = X.shape
+    mu0, v0 = X.mean(1), np.maximum(X.var(1, ddof=1), 1e-12)
+    d = np.diff(X, axis=1)
+    sigma2 = np.maximum(((d - d.mean(1, keepdims=True)) ** 2).sum(1) / (2.0 * (n - 2)), 1e-12)
+    mu0, v0, sigma2 = mu0[:, None], v0[:, None], sigma2[:, None]
+    g0 = 1.0 / (1.0 / v0 + 1.0 / sigma2)
+    prob, mu, v = np.ones((S, 1)), mu0 + (X[:, :1] - mu0) * (v0 / (v0 + sigma2)), g0
+    out = np.zeros((S, n))
+    for t in range(1, n):
+        x = X[:, t:t + 1]
+        pv = v + sigma2
+        joint = prob * np.exp(-0.5 * (x - mu) ** 2 / pv) / np.sqrt(2 * np.pi * pv)
+        cp = (joint * hazard).sum(1, keepdims=True)
+        growth = joint * (1 - hazard)
+        total = cp + growth.sum(1, keepdims=True)
+        total[~(total > 0)] = 1e-300
+        g = 1.0 / (1.0 / v + 1.0 / sigma2)
+        prob = np.hstack([cp / total, growth / total])
+        mu = np.hstack([g0 * (mu0 / v0 + x / sigma2), g * (mu / v + x / sigma2)])
+        v = np.hstack([g0, g])
+        if t >= lag:
+            out[:, t - lag] = prob[:, lag]
+    out[:, 0] = 0.0
+    return out
+
+
+def _pelt(X):
+    """Optimal partitioning into mean-change segments, one series per row:
+    F(t) = min_s F(s) + SSE(x[s:t]) + beta, beta = 2 var(x) ln n, the first
+    s kept on ties. Returns each row's segments as (start, end, mean)."""
+    S, n = X.shape
+    sx = np.hstack([np.zeros((S, 1)), np.cumsum(X, 1)])
+    s2 = np.hstack([np.zeros((S, 1)), np.cumsum(X * X, 1)])
+    beta = 2.0 * np.maximum((s2[:, n] - sx[:, n] * sx[:, n] / n) / n, 0.0) * np.log(n)
+    f, arg, rows = np.empty((S, n + 1)), np.zeros((S, n + 1), dtype=np.int64), np.arange(S)
+    f[:, 0] = -beta
+    for t in range(1, n + 1):
+        dx = sx[:, t:t + 1] - sx[:, :t]
+        cost = f[:, :t] + ((s2[:, t:t + 1] - s2[:, :t]) - dx * dx / (t - np.arange(t))) + beta[:, None]
+        arg[:, t] = cost.argmin(1)
+        f[:, t] = cost[rows, arg[:, t]]
+    segs = []
+    for r in range(S):
+        out, e = [], n
+        while e > 0:
+            st = int(arg[r, e])
+            out.append((st, e, (sx[r, e] - sx[r, st]) / (e - st)))
+            e = st
+        segs.append(out[::-1])
+    return segs
+
+
 def _close(got, want):
     return all(g is not None and abs(g - round(w, 6)) <= 1.01e-6 for g, w in zip(got, want))
+
+
+def _is_top_k(rows, want, xs, k, tol=1.01e-6):
+    """`rows` (index, value, probability) are k distinct points whose values
+    and 6-dp probabilities match the recomputation, none of them beaten by a
+    point left out (up to tol, so near-ties may fall either way)."""
+    idx = [i for i, _, _ in rows]
+    if len(rows) != k or len(set(idx)) != k or not all(0 <= i < len(want) for i in idx):
+        return False
+    want = np.round(want, 6)
+    if any(abs(v - xs[i]) > tol or abs(p - want[i]) > tol for i, v, p in rows):
+        return False
+    return want[idx].min() >= np.delete(want, idx).max() - tol
+
+
+def _same_segments(got, want):
+    """`got` rows (seg_no, start, end, mean, n_segments) equal the recomputed segments."""
+    return len(got) == len(want) and all(
+        (no, st, e, nseg) == (i + 1, wst, we, len(want)) and abs(m - round(wm, 6)) <= 1.01e-6
+        for i, ((no, st, e, m, nseg), (wst, we, wm)) in enumerate(zip(got, want)))
 
 
 def check_series_fleet(in_dir, truth, out_dir, seed, full_oracles):
@@ -200,9 +246,26 @@ def check_series_fleet(in_dir, truth, out_dir, seed, full_oracles):
         _merge(verdicts, op, not bad and len(got) == len(names),
                f"{cols} of {len(names)} series vs an independent recomputation, {len(bad)} differ {bad[:3]}")
 
+    # BOCPD's top-3 change points and PELT's segments, recomputed for every series
+    t0 = {k: v[0] for k, v in series.items()}
+    xs = np.array([series[k][1] for k in names])
+    rows = defaultdict(list)
+    for k, ts_s, value, p in _out(con, out_dir, "q_bocpd").project("event_type, ts_s, value, cp_prob").fetchall():
+        rows[k].append(((ts_s - t0[k]) // 3600, value, p))
+    bad = [k for k, want, x in zip(names, _bocpd(xs), xs) if not _is_top_k(rows[k], want, x, 3)]
+    _merge(verdicts, "q_bocpd", not bad and len(rows) == len(names),
+           f"top-3 points and cp_prob of {len(names)} series vs an independent recomputation, "
+           f"{len(bad)} differ {bad[:3]}")
+    rows = defaultdict(list)
+    for k, *seg in _out(con, out_dir, "q_pelt").project(
+            "event_type, seg_no, start_idx, end_idx, seg_mean, n_segments").fetchall():
+        rows[k].append(tuple(seg))
+    bad = [k for k, want in zip(names, _pelt(xs)) if not _same_segments(sorted(rows[k]), want)]
+    _merge(verdicts, "q_pelt", not bad and len(rows) == len(names),
+           f"segments of {len(names)} series vs an independent recomputation, {len(bad)} differ {bad[:3]}")
+
     # the planted level shift, placed within SHIFT_TOL_H hours
     shift = dict(zip(names, truth["shift_hour"]))
-    t0 = {k: v[0] for k, v in series.items()}
     found = defaultdict(set)
     for k, ts_s in _out(con, out_dir, "q_bocpd").project("event_type, ts_s").fetchall():
         if abs((ts_s - t0[k]) // 3600 - shift[k]) <= SHIFT_TOL_H:

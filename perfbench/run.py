@@ -31,7 +31,6 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
-import checks  # noqa: E402
 import gen  # noqa: E402
 
 BUILD = os.path.join(ROOT, ".bench_build")
@@ -197,6 +196,7 @@ def main():
     a = ap.parse_args()
     if not os.path.isfile(os.path.join(PROGRAM_SRC, "graft", "SparkEntry.scala")):
         raise SystemExit("[perfbench] program sources not found: run from the root of a graft checkout")
+    import checks  # it loads the compare of the checkout's tools/check.py
     cp = build()
     in_dir, truth = inputs(a.workload, a.seed)
     work = os.path.join(BUILD, "runs", f"{a.workload}-{a.seed}-{os.getpid()}")

@@ -4,7 +4,7 @@ print for every end-to-end metric its median, quartiles and spread
 ((Q3 - Q1) / median, Python's statistics.quantiles(n=4)) as a share of the
 metric's bound in BENCHMARK.json.
 
-    python3 perfbench/steady.py [--runs 10] [--seed0 1] [--workloads a,b] [--save FILE]
+    python3 perfbench/steady.py [--runs 10] [--seed0 1]
 
 It is how the bounds were set and re-proves them: every spread should stay
 below a third of its bound (setup_s excepted; its bound covers the shift of
@@ -25,14 +25,10 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--runs", type=int, default=10)
     ap.add_argument("--seed0", type=int, default=1)
-    ap.add_argument("--workloads", default="")
-    ap.add_argument("--save", default="")
     a = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
     names = [w["name"] for w in bench["workloads"]]
-    if a.workloads:
-        names = [w for w in a.workloads.split(",") if w in names]
     bounds = {m["name"]: m["bound"] for m in bench["end_to_end"]}
     raw = {}
     for w in names:
@@ -51,9 +47,6 @@ def main():
             print(f"{w} seed {seed}: {time.time() - t0:.0f}s correct={res['correct']} "
                   f"failed={res['failed']}/{res['attempted']} " +
                   " ".join(f"{k}={v['value']:.4g}" for k, v in res["metrics"].items()), flush=True)
-    if a.save:
-        with open(a.save, "w") as f:
-            json.dump(raw, f, indent=1)
     print(f"\n{'workload':14s} {'metric':16s} {'median':>11s} {'q1':>11s} {'q3':>11s} {'spread':>7s} "
           f"{'bound':>6s} {'/bound':>6s}")
     for w, runs in raw.items():
