@@ -45,11 +45,12 @@ object Scratch {
   }
 
   /** Delete every scratch dir created since the last sweep. Only call
-    * after the consuming query's terminal action. Never fatal. */
+    * after the consuming query's terminal action. Never fatal: a dir that
+    * could not be deleted keeps its delete-on-exit registration. */
   def sweep(): Unit = {
     var e = live.poll()
     while (e != null) {
-      try { e._1.cancelDeleteOnExit(e._2); e._1.delete(e._2, true) }
+      try { if (e._1.delete(e._2, true)) e._1.cancelDeleteOnExit(e._2) }
       catch { case _: Exception => () }
       e = live.poll()
     }

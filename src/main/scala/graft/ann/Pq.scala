@@ -31,54 +31,26 @@ object Pq {
       lit(0.0), (acc, v) => acc + v)
 
   /** Per-subspace codebooks: [sub][cell][dim], the deterministic
-    * [[KMeansDet]] Lloyd semantics on each slice (same seeds, same
-    * argmin tie-break by lowest cell id, same keyed-mean update; cells
-    * that lose all members are dropped and the codebook keeps survivors
-    * in cell order — codes index POSITION in that list).
+    * [[KMeansDet]] Lloyd semantics on each slice (the slices of the ks
+    * lowest-id vectors as seeds, the same argmin tie-break by lowest cell
+    * id, the same elementwise-mean update; cells that lose all members
+    * are dropped and the codebook keeps survivors in cell order — codes
+    * index POSITION in that list).
     *
-    * All m subspaces fit TOGETHER: each Lloyd round is ONE job — a
-    * map-side per-subspace argmin against the literal current books,
-    * exploded to (sub, cell, dim, x) and mean-reduced — instead of m
-    * independent chains; at any corpus size that is iters+1 passes
-    * total, not m·(iters+1). */
+    * All m subspaces fit TOGETHER on [[KMeansDet.lloyd]]'s one-pass
+    * round: each Lloyd round is ONE job whose partitions assign and sum
+    * every subspace at once, so a fit is iters + 1 jobs at any m. Persist
+    * the corpus first: every job scans it. */
   def fitCodebooks(corpus: DataFrame, m: Int, ks: Int, iters: Int,
                    id: String = "vec_id", vec: String = "embedding"): Seq[Seq[Seq[Double]]] = {
-    // seed: the slices of the ks lowest-id vectors (KMeansDet.fit's seed,
-    // sliced) — books carry (cellId, centroid) so drop/tie semantics
-    // match the per-subspace fit exactly. The dim comes from the seed
-    // rows themselves — the old `select(size(vec)).head()` was a whole
-    // extra Spark job per fit just to read an array length (r13).
-    val seedRows = corpus.orderBy(col(id)).limit(ks)
-      .select(expr(s"transform($vec, x -> cast(x as double))").as("v")).collect()
-      .map(_.getSeq[Double](0))
+    val seedRows = KMeansDet.seeds(corpus, ks, id, vec)
     val dim = seedRows.head.length
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val sub = dim / m
-    var books: Seq[Seq[(Int, Seq[Double])]] = (0 until m).map { j =>
-      seedRows.zipWithIndex.map { case (v, c) => (c, v.slice(j * sub, (j + 1) * sub).toSeq) }.toSeq
+    val books = Array.tabulate(m) { j =>
+      KMeansDet.Book(seedRows.indices.toArray, seedRows.map(_.slice(j * sub, (j + 1) * sub)))
     }
-    var it = 0
-    while (it < iters) {
-      // per row and subspace: argmin cell over the literal books (ties →
-      // lowest cell id), exploded to per-dim rows for the keyed mean
-      val assigned = corpus.select(explode(array(books.zipWithIndex.map { case (book, j) =>
-        val slices = slice(col(vec), j * sub + 1, sub)
-        val best = array_min(array(book.map { case (cellId, cent) =>
-          struct(d2(slices, typedlit(cent)).as("d"), lit(cellId).as("c"))
-        }: _*)).getField("c")
-        struct(lit(j).as("sub"), best.as("cell"), slices.as("v"))
-      }: _*)).as("a"))
-        .select(col("a.sub"), col("a.cell"), posexplode(col("a.v")).as(Seq("dim", "x")))
-      val means = assigned.groupBy("sub", "cell", "dim")
-        .agg(avg(col("x").cast("double")).as("cx"))
-        .collect().map(r => ((r.getInt(0), r.getInt(1)), (r.getInt(2), r.getDouble(3))))
-        .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sortBy(_._1).map(_._2).toSeq }
-      books = (0 until m).map { j =>
-        means.collect { case ((s, c), cent) if s == j => (c, cent) }.toSeq.sortBy(_._1)
-      }
-      it += 1
-    }
-    books.map(_.map(_._2))
+    KMeansDet.lloyd(corpus, vec, books, sub, iters).map(_.cents.toSeq.map(_.toSeq)).toSeq
   }
 
   /** The codes column expression: array<int> of per-subspace argmins

@@ -54,6 +54,16 @@ object Bocpd {
 
   /** The recurrence with explicit priors — shared verbatim by the batch
     * estimate-then-scan path and the streaming replay equivalence spec.
+    *
+    * The run-length posterior variance obeys V[0] = 1/(1/v0 + 1/σ²),
+    * V[r+1] = 1/(1/V[r] + 1/σ²): it does not depend on t, so V, the
+    * predictive variance V[r] + σ² and its normalizer sqrt(2π(V[r] + σ²))
+    * are computed once per series. Probability and mean live in two
+    * ping-pong buffers. With proper priors (v0, σ² positive and finite,
+    * hazard ≤ 1) the predictive is finite unless its residual is NaN, so a
+    * run length whose mass is exactly 0.0 has a joint of exactly 0.0 and
+    * skips the exp; its slot stays 0.0 from then on. Every value is the
+    * same double, bit for bit, as the per-step textbook form.
     */
   def changeProbWithPriors(xs: Array[Double], priors: Priors,
                            hazard: Double = 0.01, lagN: Int = 10): Array[Double] = {
@@ -62,47 +72,63 @@ object Bocpd {
     if (n < 2) return out
     val sigma2 = priors.sigma2
     val mu0 = priors.mu0; val v0 = priors.v0 // prior over segment mean
-    // run-length posterior: index = run length in points seen since cp
-    var rProb = Array(1.0)
-    var rMu = Array(mu0 + (xs(0) - mu0) * (v0 / (v0 + sigma2)))
-    var rV = Array(1.0 / (1.0 / v0 + 1.0 / sigma2))
+    // run-length tables, index = run length in points seen since cp
+    val g0 = 1.0 / (1.0 / v0 + 1.0 / sigma2)
+    val rV = new Array[Double](n)
+    val pv = new Array[Double](n)
+    val norm = new Array[Double](n)
+    rV(0) = g0
+    var i = 0
+    while (i < n) {
+      if (i > 0) rV(i) = 1.0 / (1.0 / rV(i - 1) + 1.0 / sigma2)
+      pv(i) = rV(i) + sigma2
+      norm(i) = math.sqrt(2 * math.Pi * pv(i))
+      i += 1
+    }
+    var rProb = new Array[Double](n)
+    var rMu = new Array[Double](n)
+    var nProb = new Array[Double](n)
+    var nMu = new Array[Double](n)
+    val growth = new Array[Double](n)
+    rProb(0) = 1.0
+    rMu(0) = mu0 + (xs(0) - mu0) * (v0 / (v0 + sigma2))
+    val skipZero = v0 > 0 && v0 < Double.PositiveInfinity &&
+      sigma2 > 0 && sigma2 < Double.PositiveInfinity && hazard <= 1.0
+    var k = 1 // live run lengths
     var t = 1
     while (t < n) {
       val x = xs(t)
-      val k = rProb.length
-      val growth = new Array[Double](k)
+      val xs2 = x / sigma2
       var cp = 0.0
-      var i = 0
+      i = 0
       while (i < k) {
-        val pv = rV(i) + sigma2
+        val p = rProb(i)
         val d = x - rMu(i)
-        val pred = math.exp(-0.5 * d * d / pv) / math.sqrt(2 * math.Pi * pv)
-        val joint = rProb(i) * pred
-        growth(i) = joint * (1 - hazard)
-        cp += joint * hazard
+        if (p == 0.0 && skipZero && !d.isNaN) growth(i) = 0.0
+        else {
+          val pred = math.exp(-0.5 * d * d / pv(i)) / norm(i)
+          val joint = p * pred
+          growth(i) = joint * (1 - hazard)
+          cp += joint * hazard
+        }
         i += 1
       }
       var total = cp
       i = 0; while (i < k) { total += growth(i); i += 1 }
       if (total <= 0 || total.isNaN) total = 1e-300
-      val nProb = new Array[Double](k + 1)
-      val nMu = new Array[Double](k + 1)
-      val nV = new Array[Double](k + 1)
       // r=0: segment restarted at t, observe x under the prior
-      val g0 = 1.0 / (1.0 / v0 + 1.0 / sigma2)
       nProb(0) = cp / total
-      nV(0) = g0
-      nMu(0) = g0 * (mu0 / v0 + x / sigma2)
+      nMu(0) = g0 * (mu0 / v0 + xs2)
       i = 0
       while (i < k) {
         nProb(i + 1) = growth(i) / total
-        val g = 1.0 / (1.0 / rV(i) + 1.0 / sigma2)
-        nV(i + 1) = g
-        nMu(i + 1) = g * (rMu(i) / rV(i) + x / sigma2)
+        nMu(i + 1) = rV(i + 1) * (rMu(i) / rV(i) + xs2)
         i += 1
       }
-      if (t >= lagN && lagN < nProb.length) out(t - lagN) = nProb(lagN)
-      rProb = nProb; rMu = nMu; rV = nV
+      k += 1
+      if (t >= lagN && lagN < k) out(t - lagN) = nProb(lagN)
+      val sp = rProb; rProb = nProb; nProb = sp
+      val sm = rMu; rMu = nMu; nMu = sm
       t += 1
     }
     out(0) = 0.0 // the first point is never a changepoint (reference convention)

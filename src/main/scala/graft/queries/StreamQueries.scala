@@ -110,6 +110,84 @@ object StreamQueries {
     s.createDataFrame(df.collect().toSeq.asJava, df.schema)
   }
 
+  /** Throwaway checkpoint for the replay queries. The replay certifies
+    * the FINAL EMITTED STATE through the memory sink — its checkpoint is
+    * never restarted from, so the per-microbatch offset/commit/state-delta
+    * fsyncs it pays on a disk are pure harness latency. The root is the
+    * session's checkpoint directory when one is set, so every write stays
+    * inside the session's own directories; else tmpfs when the host has
+    * one; else `java.io.tmpdir`. The directory is
+    * made and removed through the Hadoop FileSystem, so a checkpoint
+    * directory that is not local works too. A production deployment keeps
+    * a durable checkpoint store (the restart spec exercises that path
+    * explicitly with its own on-disk checkpoint).
+    */
+  private[graft] def throwawayCkpt(s: SparkSession): org.apache.hadoop.fs.Path = {
+    val shm = new java.io.File("/dev/shm")
+    val root = s.sparkContext.getCheckpointDir.getOrElse {
+      val local = if (shm.isDirectory && shm.canWrite) shm else new java.io.File(System.getProperty("java.io.tmpdir"))
+      local.toURI.toString
+    }
+    val dir = new org.apache.hadoop.fs.Path(root.stripSuffix("/") + "/graft_ckpt_" + java.util.UUID.randomUUID())
+    dir.getFileSystem(s.sparkContext.hadoopConfiguration).mkdirs(dir)
+    dir
+  }
+  /** Start a memory-sink stream on a throwaway checkpoint; the caller
+    * must stop the query, then [[dropCkpt]]. */
+  private[queries] def startMem(out: DataFrame, name: String): (org.apache.spark.sql.streaming.StreamingQuery, org.apache.hadoop.fs.Path) = {
+    val ck = throwawayCkpt(out.sparkSession)
+    (out.writeStream.format("memory").queryName(name).outputMode("append")
+      .option("checkpointLocation", ck.toString).start(), ck)
+  }
+  private[graft] def dropCkpt(s: SparkSession, ck: org.apache.hadoop.fs.Path): Unit =
+    ck.getFileSystem(s.sparkContext.hadoopConfiguration).delete(ck, true)
+
+  /** The replay-baseline split of q_stream_spc and q_stream_zscore: per
+    * series, the first half of the hourly rows (rn ≤ nn div 2) fits the
+    * served store (event_type, mu, sigma), and the second half is the
+    * chronological feed. ONE grouped job on the window's partitioning
+    * computes both — the store's avg/stddev_pop over `when(first half,
+    * value)` (nulls are skipped, so the sums run in the same row order as
+    * a filter-then-group would), and the feed as a `collect_list` of the
+    * second half. The store is built straight from the collected rows (no
+    * second collect through [[localize]]), and only series that have a
+    * first half get one, as a filtered group-by would. The feed is sorted
+    * on the driver by (ts, event_type) with Spark's ordering: nulls first,
+    * strings by UTF-8 bytes.
+    */
+  private[graft] def baselineSplit(s: SparkSession, dir: String): (DataFrame, Seq[Point]) = {
+    import scala.jdk.CollectionConverters._
+    val w = Window.partitionBy("event_type").orderBy("ts")
+    val wk = Window.partitionBy("event_type")
+    val first = col("rn") <= expr("nn div 2")
+    val split = Tables.hourlyEvents(s, dir).drop("n")
+      .withColumn("rn", row_number().over(w))
+      .withColumn("nn", count(lit(1)).over(wk))
+      .groupBy("event_type")
+      .agg(round(avg(when(first, col("value"))), 6).as("mu"),
+        round(greatest(stddev_pop(when(first, col("value"))), lit(1e-6)), 6).as("sigma"),
+        count(when(first, lit(1))).as("n_first"),
+        collect_list(when(!first, struct(col("ts"), col("value")))).as("feed"))
+    val rows = split.collect()
+    val storeSchema = org.apache.spark.sql.types.StructType(split.schema.fields.take(3))
+    val store = s.createDataFrame(
+      rows.filter(_.getLong(3) > 0)
+        .map(r => org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2))).toSeq.asJava,
+      storeSchema)
+    val feed = rows.toSeq.flatMap { r =>
+      r.getSeq[org.apache.spark.sql.Row](4).map(p => Point(r.getString(0), p.getTimestamp(0), p.getDouble(1)))
+    }.sorted(feedOrder)
+    (store, feed)
+  }
+  private val feedOrder: Ordering[Point] = (a, b) => {
+    val c = a.ts.compareTo(b.ts)
+    if (c != 0) c
+    else if (a.event_type == null) { if (b.event_type == null) 0 else -1 }
+    else if (b.event_type == null) 1
+    else org.apache.spark.unsafe.types.UTF8String.fromString(a.event_type)
+      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b.event_type))
+  }
+
   /** Run a started streaming query over a chunked feed and return the
     * memory-sink table (stable after stop — the sink buffer backs the
     * temp view). `tail` lets callers append a watermark-advancing
@@ -123,37 +201,6 @@ object StreamQueries {
     * the session value after. A production deployment keeps the real
     * setting.
     */
-  /** Throwaway checkpoint root for the replay queries: tmpfs when the
-    * host has one. The replay certifies the FINAL EMITTED STATE through
-    * the memory sink — its checkpoint is never restarted from, so the
-    * per-microbatch offset/commit/state-delta fsyncs it pays on a disk
-    * /tmp are pure harness latency (guide §6: I/O layout). Falls back to
-    * Spark's default temp checkpoint off tmpfs; a production deployment
-    * keeps a durable checkpoint store (the restart spec exercises that
-    * path explicitly with its own on-disk checkpoint).
-    */
-  private[queries] def throwawayCkpt(): Option[String] = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) {
-      val d = new java.io.File(shm, "graft_ckpt_" + java.util.UUID.randomUUID())
-      d.mkdirs()
-      Some(d.getAbsolutePath)
-    } else None
-  }
-  private[queries] def rmrf(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rmrf)
-    f.delete()
-  }
-  /** Start a memory-sink stream on the throwaway checkpoint; the caller
-    * must stop the query, then [[dropCkpt]]. */
-  private[queries] def startMem(out: DataFrame, name: String): (org.apache.spark.sql.streaming.StreamingQuery, Option[String]) = {
-    val w = out.writeStream.format("memory").queryName(name).outputMode("append")
-    val ck = throwawayCkpt()
-    (ck.map(p => w.option("checkpointLocation", p)).getOrElse(w).start(), ck)
-  }
-  private[queries] def dropCkpt(ck: Option[String]): Unit =
-    ck.foreach(p => rmrf(new java.io.File(p)))
-
   private def replay[T](s: SparkSession, mem: MemoryStream[T], out: DataFrame,
                         name: String, feed: Seq[T], tail: Seq[T] = Nil): DataFrame = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
@@ -163,7 +210,7 @@ object StreamQueries {
       try {
         chunks(feed, 5).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
         if (tail.nonEmpty) { mem.addData(tail: _*); q.processAllAvailable() }
-      } finally { q.stop(); dropCkpt(ck) }
+      } finally { q.stop(); dropCkpt(s, ck) }
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
     s.table(name)
   }
@@ -178,20 +225,9 @@ object StreamQueries {
     "q_stream_spc" -> ((s, dir) => {
       implicit val sqlCtx = s.sqlContext
       import s.implicits._
-      val w = Window.partitionBy("event_type").orderBy("ts")
-      val wk = Window.partitionBy("event_type")
-      val base = Tables.hourlyEvents(s, dir).drop("n")
-        .withColumn("rn", row_number().over(w))
-        .withColumn("nn", count(lit(1)).over(wk))
-      val mo = base.where(col("rn") <= expr("nn div 2"))
-        .groupBy("event_type")
-        .agg(round(avg("value"), 6).as("mu"),
-          round(greatest(stddev_pop(col("value")), lit(1e-6)), 6).as("sigma"))
-      val feed = base.where(col("rn") > expr("nn div 2"))
-        .select("event_type", "ts", "value").orderBy("ts", "event_type").collect()
-        .map(r => Point(r.getString(0), r.getTimestamp(1), r.getDouble(2))).toSeq
+      val (mo, feed) = baselineSplit(s, dir)
       val mem = MemoryStream[Point]
-      val t = replay(s, mem, StreamingDetectors.spcRules(mem.toDF(), localize(s, mo)).toDF(),
+      val t = replay(s, mem, StreamingDetectors.spcRules(mem.toDF(), mo).toDF(),
         sink("spc"), feed)
       t.select(col("event_type"), unix_timestamp(col("ts")).as("ts_s"), col("value"),
         round(col("z"), 6).as("z"), col("r1"), col("r2"), col("r3"), col("r4"))
@@ -457,7 +493,7 @@ object StreamQueries {
             chunks(uniq, 5).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
             mem.addData(dupA: _*); q.processAllAvailable()
             mem.addData(dupB: _*); q.processAllAvailable()
-          } finally { q.stop(); dropCkpt(ck) }
+          } finally { q.stop(); dropCkpt(s, ck) }
           q.name
         } finally s.conf.set("spark.sql.shuffle.partitions", prev)
       s.table(name).select("doc_id")
@@ -511,21 +547,10 @@ object StreamQueries {
     "q_stream_zscore" -> ((s, dir) => {
       implicit val sqlCtx = s.sqlContext
       import s.implicits._
-      val w = Window.partitionBy("event_type").orderBy("ts")
-      val wk = Window.partitionBy("event_type")
-      val base = Tables.hourlyEvents(s, dir).drop("n")
-        .withColumn("rn", row_number().over(w))
-        .withColumn("nn", count(lit(1)).over(wk))
-      val mo = base.where(col("rn") <= expr("nn div 2"))
-        .groupBy("event_type")
-        .agg(round(avg("value"), 6).as("mu"),
-          round(greatest(stddev_pop(col("value")), lit(1e-6)), 6).as("sigma"))
-      val feed = base.where(col("rn") > expr("nn div 2"))
-        .select("event_type", "ts", "value").orderBy("ts", "event_type").collect()
-        .map(r => Point(r.getString(0), r.getTimestamp(1), r.getDouble(2))).toSeq
+      val (mo, feed) = baselineSplit(s, dir)
       val mem = MemoryStream[Point]
       val t = replay(s, mem,
-        StreamingDetectors.zscoreAgainstBaseline(mem.toDF(), localize(s, mo), z = 3.0),
+        StreamingDetectors.zscoreAgainstBaseline(mem.toDF(), mo, z = 3.0),
         sink("z"), feed)
       t.select(col("event_type"), unix_timestamp(col("ts")).as("ts_s"),
         col("value"), round(col("z"), 6).as("z"))
@@ -749,7 +774,7 @@ object StreamQueries {
             chunks(feed, 5).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
             mem.addData(dupC: _*); q.processAllAvailable()
             mem.addData(dupS: _*); q.processAllAvailable()
-          } finally { q.stop(); dropCkpt(ck) }
+          } finally { q.stop(); dropCkpt(s, ck) }
           q.name
         } finally s.conf.set("spark.sql.shuffle.partitions", prev)
       s.table(name)

@@ -35,6 +35,92 @@ class AlgoSpec extends AnyFunSuite {
     assert(probs.slice(20, 80).max < 0.2)
   }
 
+  /** The textbook per-step BOCPD recurrence (fresh arrays every step, the
+    * posterior variance recomputed every step, every run length scored):
+    * the reference the production kernel must equal bit for bit. */
+  private def bocpdReference(xs: Array[Double], priors: Bocpd.Priors,
+                             hazard: Double, lagN: Int): Array[Double] = {
+    val n = xs.length
+    val out = new Array[Double](n)
+    if (n < 2) return out
+    val sigma2 = priors.sigma2
+    val mu0 = priors.mu0; val v0 = priors.v0
+    var rProb = Array(1.0)
+    var rMu = Array(mu0 + (xs(0) - mu0) * (v0 / (v0 + sigma2)))
+    var rV = Array(1.0 / (1.0 / v0 + 1.0 / sigma2))
+    var t = 1
+    while (t < n) {
+      val x = xs(t)
+      val k = rProb.length
+      val growth = new Array[Double](k)
+      var cp = 0.0
+      var i = 0
+      while (i < k) {
+        val pv = rV(i) + sigma2
+        val d = x - rMu(i)
+        val pred = math.exp(-0.5 * d * d / pv) / math.sqrt(2 * math.Pi * pv)
+        val joint = rProb(i) * pred
+        growth(i) = joint * (1 - hazard)
+        cp += joint * hazard
+        i += 1
+      }
+      var total = cp
+      i = 0; while (i < k) { total += growth(i); i += 1 }
+      if (total <= 0 || total.isNaN) total = 1e-300
+      val nProb = new Array[Double](k + 1)
+      val nMu = new Array[Double](k + 1)
+      val nV = new Array[Double](k + 1)
+      val g0 = 1.0 / (1.0 / v0 + 1.0 / sigma2)
+      nProb(0) = cp / total
+      nV(0) = g0
+      nMu(0) = g0 * (mu0 / v0 + x / sigma2)
+      i = 0
+      while (i < k) {
+        nProb(i + 1) = growth(i) / total
+        val g = 1.0 / (1.0 / rV(i) + 1.0 / sigma2)
+        nV(i + 1) = g
+        nMu(i + 1) = g * (rMu(i) / rV(i) + x / sigma2)
+        i += 1
+      }
+      if (t >= lagN && lagN < nProb.length) out(t - lagN) = nProb(lagN)
+      rProb = nProb; rMu = nMu; rV = nV
+      t += 1
+    }
+    out(0) = 0.0
+    out
+  }
+
+  test("BOCPD kernel equals the per-step reference recurrence bit for bit") {
+    val rnd = new scala.util.Random(11)
+    def bits(a: Array[Double]) = a.map(java.lang.Double.doubleToRawLongBits).toSeq
+    // seeded hourly-like series with one planted ±12σ level shift each: the
+    // shift drives the older run lengths' mass to exactly 0.0
+    val series = (0 until 240).map { s =>
+      val n = 720
+      val level = 50 + rnd.nextDouble() * 100
+      val sd = 1 + rnd.nextDouble() * 2
+      val at = 180 + rnd.nextInt(360)
+      val shift = (if (rnd.nextBoolean()) 12 else -12) * sd
+      Array.tabulate(n)(i => level + (if (i >= at) shift else 0.0) +
+        math.sin(2 * math.Pi * i / 24) * sd + rnd.nextGaussian() * sd)
+    }
+    val short = Seq(Array.empty[Double], Array(1.0), Array(1.0, 2.0), Array.fill(12)(3.0),
+      Array(0.0, 1e6, -1e6, 0.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0))
+    for (xs <- series ++ short; (hazard, lagN) <- Seq((0.01, 10), (0.2, 3), (0.001, 40))) {
+      val pr = if (xs.length >= 2) Bocpd.priorsOf(xs) else Bocpd.Priors(0.0, 1.0, 1.0)
+      val got = Bocpd.changeProbWithPriors(xs, pr, hazard, lagN)
+      assert(bits(got) == bits(bocpdReference(xs, pr, hazard, lagN)),
+        s"n=${xs.length} hazard=$hazard lag=$lagN")
+    }
+    // non-finite inputs and improper priors take the unskipped path
+    val odd = Array(1.0, 2.0, Double.NaN, 3.0, Double.PositiveInfinity, 4.0, 5.0, 1.0, 2.0, 3.0, 4.0, 5.0)
+    for (pr <- Seq(Bocpd.Priors(2.0, 1.0, 1.0), Bocpd.Priors(2.0, 0.0, 1.0), Bocpd.Priors(2.0, 1.0, 0.0)))
+      assert(bits(Bocpd.changeProbWithPriors(odd, pr, 0.01, 2)) == bits(bocpdReference(odd, pr, 0.01, 2)))
+    val shifted = series.head
+    assert(bits(Bocpd.changeProbWithPriors(shifted, Bocpd.priorsOf(shifted), 1.5, 10)) ==
+      bits(bocpdReference(shifted, Bocpd.priorsOf(shifted), 1.5, 10)))
+  }
+
   test("FFT seasonality finds the true period of a sine") {
     val xs = Array.tabulate(240)(i => math.sin(2 * math.Pi * i / 24.0) + 0.1)
     val (period, share) = FftSeasonality.dominantPeriod(xs)

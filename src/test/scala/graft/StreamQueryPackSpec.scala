@@ -34,6 +34,30 @@ class StreamQueryPackSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stream === batch)
   }
 
+  test("the replay baseline split equals the two-chain form: store bits and feed order") {
+    import org.apache.spark.sql.expressions.Window
+    import graft.streaming.StreamingDetectors.Point
+    val w = Window.partitionBy("event_type").orderBy("ts")
+    val wk = Window.partitionBy("event_type")
+    val base = Tables.hourlyEvents(spark, dir).drop("n")
+      .withColumn("rn", row_number().over(w))
+      .withColumn("nn", count(lit(1)).over(wk))
+    val mo = base.where(col("rn") <= expr("nn div 2"))
+      .groupBy("event_type")
+      .agg(round(avg("value"), 6).as("mu"),
+        round(greatest(stddev_pop(col("value")), lit(1e-6)), 6).as("sigma"))
+    val feed = base.where(col("rn") > expr("nn div 2"))
+      .select("event_type", "ts", "value").orderBy("ts", "event_type").collect()
+      .map(r => Point(r.getString(0), r.getTimestamp(1), r.getDouble(2))).toSeq
+    val (store, got) = StreamQueries.baselineSplit(spark, dir)
+    def bits(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => (r.getString(0),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toSet
+    assert(store.schema === mo.schema)
+    assert(bits(store).nonEmpty && bits(store) === bits(mo))
+    assert(got.nonEmpty && got === feed)
+  }
+
   test("q_stream_page_hinkley matches the batch q_page_hinkley alarm points") {
     val stream = StreamQueries.defs("q_stream_page_hinkley")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(4))).toSet
