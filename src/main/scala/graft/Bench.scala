@@ -1,38 +1,34 @@
 package graft
 import org.apache.spark.sql.SparkSession
+
+/** The timed suite. Usage:
+  *   runMain graft.Bench [--passes N] [query ...]
+  * Reads the data dir from SPARK_GRAFT_SF_DIR and the core count from
+  * SPARK_GRAFT_CPUS (see [[GraftSession]]). With no query names it runs
+  * all queries, writes BENCH_FULL*.json and BENCH_LAST.json, and prints
+  * the compact JSON line last; names filter the run and write no files.
+  * `--passes N` first runs the selected queries N times in this JVM and
+  * prints one `{"pass":p,...}` line per pass: warm steady-state timings
+  * for local iteration, which diagnose but are not the measured suite.
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
+    val (passes, names) = args.toList match {
+      case "--passes" :: n :: rest if n.toIntOption.exists(_ > 0) => (n.toInt, rest)
+      case "--passes" :: _ =>
+        System.err.println("[bench] usage: Bench [--passes N] [query ...], N a positive integer")
+        sys.exit(2)
+      case rest => (0, rest)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // the opt-in event log fails session startup if the dir is absent
-    if (sys.env.get("SPARK_GRAFT_EVENTLOG").contains("true"))
-      try java.nio.file.Files.createDirectories(java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_EVENTLOG_DIR", "/tmp/graft-eventlog")))
-      catch { case _: Exception => }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // r12's global coalescePartitions.minPartitionSize=1k pin is GONE:
-      // it protected a few CPU-dense kernel stages from AQE's size-based
-      // coalescing but denied coalescing to all 423 queries (+18% driver
-      // total, VERDICT r12 #4). The kernel stages now pin their own
-      // parallelism via SeriesOps.spread (REPARTITION_BY_NUM is never
-      // coalesced); everything else coalesces normally.
-      .config("spark.ui.enabled", "false")
-      // opt-in Spark event log for offline stage-level attribution (guide
-      // §1.5/§7): off by default, zero effect on the driver's runs
-      .config("spark.eventLog.enabled", sys.env.getOrElse("SPARK_GRAFT_EVENTLOG", "false"))
-      .config("spark.eventLog.dir", sys.env.getOrElse("SPARK_GRAFT_EVENTLOG_DIR", "/tmp/graft-eventlog"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.start(cpus)
     Tables.warnOnSchemaDrift(spark, sfDir)
     // untimed warmup: JIT/codegen/parquet-footer costs land here, not on
     // whichever query happens to run first
     try SparkEntry.queries.get("q_metrics").foreach(_(spark, sfDir).count())
     catch { case _: Throwable => }
-    val only = args.toSet // optional query-name filter for local iteration
+    val only = names.toSet // optional query-name filter for local iteration
     val unknown = only -- SparkEntry.queries.keySet
     if (unknown.nonEmpty)
       System.err.println(s"[bench] unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
@@ -42,22 +38,15 @@ object Bench {
       spark.stop()
       sys.exit(2)
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(q => only.isEmpty || only(q._1)).map { case (name, fn) =>
-      spark.sparkContext.setJobDescription(name) // label jobs per query (guide §1.5)
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable => System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // drop DataFrame caches a query registered (e.g. MinHash signature
-      // reuse) so timings stay isolated and a 174-query session doesn't
-      // accumulate dead cached blocks; same for scratch parquet
-      spark.sqlContext.clearCache()
-      Scratch.sweep()
+    val selected = SparkEntry.queries.keys.toSeq.sorted.filter(q => only.isEmpty || only(q))
+    (1 to passes).foreach { p =>
+      val times = selected.map(name => name -> time(spark, sfDir, name, name)._1)
+      println(s"""{"pass":$p,${times.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString(",")}}""")
+    }
+    val results = selected.map { name =>
+      val (dt, ok) = time(spark, sfDir, name, name)
       (name, dt, ok)
     }
-    def fmt(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def qjson(rs: Seq[(String, Double, Boolean)]): String =
       rs.map { case (k, v, ok) => "\"" + k + "\":" + (if (ok) fmt(v) else -1.0) }.mkString("{", ",", "}")
     val errs = results.collect { case (k, _, false) => k }
@@ -71,17 +60,7 @@ object Bench {
     val reruns: Seq[(String, Seq[Double])] =
       if (only.nonEmpty) Seq.empty
       else top.map { case (name, t1, _) =>
-        val fn = SparkEntry.queries(name)
-        spark.sparkContext.setJobDescription(s"$name (rerun)")
-        val more = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          try fn(spark, sfDir).count()
-          catch { case e: Throwable => System.err.println(s"[bench] rerun $name FAILED: ${e.getMessage}") }
-          val dt = (System.nanoTime() - t0) / 1e9
-          spark.sqlContext.clearCache()
-          Scratch.sweep()
-          dt
-        }
+        val more = (1 to 2).map(_ => time(spark, sfDir, name, s"$name (rerun)")._1)
         name -> (t1 +: more)
       }
     def p50(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
@@ -130,5 +109,23 @@ object Bench {
     if (only.isEmpty) writeJson("BENCH_LAST.json", compact)
     println(compact)
     spark.stop()
+  }
+
+  private def fmt(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+
+  /** Run one query once under `label`: time its `count()`, then drop the
+    * DataFrame caches it registered (e.g. MinHash signature reuse) and
+    * its scratch parquet, so timings stay isolated and a long session
+    * does not accumulate dead cached blocks. Returns (seconds, ok). */
+  private def time(spark: SparkSession, sfDir: String, name: String, label: String): (Double, Boolean) = {
+    spark.sparkContext.setJobDescription(label) // label jobs per query (guide §1.5)
+    val t0 = System.nanoTime()
+    val ok =
+      try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+      catch { case e: Throwable => System.err.println(s"[bench] $label FAILED: ${e.getMessage}"); false }
+    val dt = (System.nanoTime() - t0) / 1e9
+    spark.sqlContext.clearCache()
+    Scratch.sweep()
+    (dt, ok)
   }
 }

@@ -1,29 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for named queries to files — the plan
   * evidence the optimization rounds commit under plans/rN/. Usage:
-  *   runMain graft.PlanDump <outDir> <suffix> <query> [query ...]
-  * writes <outDir>/<query>_<suffix>.txt for each name. Reads the data
-  * dir from SPARK_GRAFT_SF_DIR like Bench; session conf matches Bench so
-  * the captured plan is the one the bench actually runs.
+  *   runMain graft.PlanDump <outDir> <suffix> [query ...]
+  * writes <outDir>/<query>_<suffix>.txt for each name, or for every query
+  * when no name is given. Reads the data dir from SPARK_GRAFT_SF_DIR like
+  * Bench; the session is Bench's ([[GraftSession]]) so the captured plan
+  * is the one the bench actually runs.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
-    val names = args.drop(2)
+    val names = if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

@@ -24,8 +24,8 @@ object Scratch {
   /** Scratch dirs created since the last [[sweep]] — a long bench session
     * (423 queries × 3 rerun passes) would otherwise accumulate unbounded
     * scratch parquet in /tmp for the JVM lifetime (deleteOnExit is only
-    * the backstop). Bench/Verify/BenchLoop sweep at each query boundary,
-    * after the query's terminal action, when no plan can still read them.
+    * the backstop). Bench and Verify sweep at each query boundary, after
+    * the query's terminal action, when no plan can still read them.
     */
   private val live = new java.util.concurrent.ConcurrentLinkedQueue[(org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path)]()
 

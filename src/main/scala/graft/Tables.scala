@@ -173,7 +173,13 @@ object Tables {
        |      QUALIFY row_number() OVER (ORDER BY md5(event_type), event_type) <= $SeriesPairCap) k
        |USING (event_type)""".stripMargin
 
-  /** Oracle-side twin of `TS.fillGaps(hourlyEvents…, 3600, Some(0.0))`:
+  /** The dense zero-filled hourly grid: [[hourlyEvents]] without `n`,
+    * every missing hour of each `event_type` series filled with 0.0. The
+    * one Spark-side copy; [[denseHourlySql]] is its oracle twin. */
+  def denseHourly(spark: SparkSession, dir: String): DataFrame =
+    TS.fillGaps(hourlyEvents(spark, dir).drop("n"), TSSchema(keys = Seq("event_type")), 3600L, Some(0.0))
+
+  /** Oracle-side twin of [[denseHourly]]:
     * the dense zero-filled hourly grid, as CTEs over a `hourly` CTE.
     * ONE definition — the query packs must not fork their own copies
     * (a gap-fill semantics change has to hit every oracle at once). */

@@ -387,7 +387,7 @@ object AnalysisQueries {
     // coefficients are bit-identical by the shared-moment discipline).
     "q_prophet_trend" -> ((s, dir) => {
       val S = TSSchema(keys = Seq("event_type"))
-      val dense = TS.fillGaps(hourly(s, dir).drop("n"), S, 3600L, Some(0.0))
+      val dense = Tables.denseHourly(s, dir)
       val base = SeriesOps.aggSeries(dense, S, Seq("r1", "r2", "r3", "r4", "nn", "nact")) { xs =>
         val (b, na, yscale) =
           graft.models.Regressors.prophetMapFit(xs, period = 24, orders = 3, nChangepoints = 4)
@@ -590,7 +590,7 @@ object AnalysisQueries {
     // sparse-series forecaster the reference's smoothing family lacks.
     "q_croston" -> ((s, dir) => {
       val S = TSSchema(keys = Seq("event_type"))
-      val dense = TS.fillGaps(hourly(s, dir).drop("n"), S, 3600L, Some(0.0))
+      val dense = Tables.denseHourly(s, dir)
       SeriesOps.aggSeries(dense, S,
         Seq("n_nonzero", "z_hat", "y_hat", "croston", "sba")) { xs =>
         graft.models.Croston.fit(xs)
@@ -643,7 +643,7 @@ object AnalysisQueries {
     // oracle keep zero buckets finite.
     "q_holtwinters_mul" -> ((s, dir) => {
       val S = TSSchema(keys = Seq("event_type"))
-      val dense = TS.fillGaps(hourly(s, dir).drop("n"), S, 3600L, Some(0.0))
+      val dense = Tables.denseHourly(s, dir)
       SeriesOps.aggSeries(dense, S, Seq("level", "trend", "yhat_1", "yhat_24")) { xs =>
         val m = 24
         val (l, b, seas) = graft.models.Smoothers.holtWintersMul(xs, m, 0.3, 0.05, 0.1)
@@ -782,7 +782,7 @@ object AnalysisQueries {
     // pre rows and aggregates the same projections.
     "q_causal_impact" -> ((s, dir) => {
       val S = TSSchema(keys = Seq("event_type"))
-      val dense = TS.fillGaps(hourly(s, dir).drop("n"), S, 3600L, Some(0.0))
+      val dense = Tables.denseHourly(s, dir)
       SeriesOps.aggSeries(dense, S,
         Seq("n_pre", "n_post", "cum_actual", "cum_pred", "abs_effect", "rel_effect", "z", "significant")) { xs =>
         val n = xs.length
@@ -1135,10 +1135,7 @@ object AnalysisQueries {
       // units; + 0.0 normalizes a −0.0 round result
       def d(k: Int) = s"round(w.b[${2 + k}] * f.yscale, 6) + 0.0"
       s"""WITH RECURSIVE hourly AS ($H),
-         |hb AS (SELECT event_type, min(ts) t0, max(ts) t1 FROM hourly GROUP BY 1),
-         |hgrid AS (SELECT event_type, unnest(generate_series(t0, t1, INTERVAL 1 HOUR)) AS ts FROM hb),
-         |dense AS (SELECT g.event_type, g.ts, coalesce(h.value, 0.0) AS value
-         |          FROM hgrid g LEFT JOIN hourly h ON g.event_type = h.event_type AND g.ts = h.ts),
+         |${Tables.denseHourlySql},
          |ord AS (SELECT event_type, value AS y,
          |  row_number() OVER (PARTITION BY event_type ORDER BY ts) - 1 AS t,
          |  count(*) OVER (PARTITION BY event_type) AS n FROM dense),

@@ -21,7 +21,7 @@ object CoreQueries {
       hourly(s, dir).select(col("event_type"), epochS("ts"), col("value"), col("n"))),
 
     "q_fill_gaps" -> ((s, dir) =>
-      TS.fillGaps(hourly(s, dir).drop("n"), S, 3600L, Some(0.0))
+      Tables.denseHourly(s, dir)
         .select(col("event_type"), epochS("ts"), col("value"))),
 
     "q_interpolate_linear" -> ((s, dir) =>

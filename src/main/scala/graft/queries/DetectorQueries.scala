@@ -14,7 +14,6 @@ import org.apache.spark.sql.functions._
 object DetectorQueries {
   private val S = TSSchema(keys = Seq("event_type"))
   private def hourly(s: SparkSession, dir: String) = Tables.hourlyEvents(s, dir).drop("n")
-  private def dense(s: SparkSession, dir: String) = TS.fillGaps(hourly(s, dir), S, 3600L, Some(0.0))
   private val H = Tables.hourlySql
   private val DenseSql =
     """b AS (SELECT event_type, min(ts) t0, max(ts) t1 FROM hourly GROUP BY 1),
@@ -156,7 +155,7 @@ object DetectorQueries {
       Detectors.hourlyRatio(Tables.events(s, dir).select(col("event_type"), col("ts"), col("value")), S)),
 
     "q_seasonality_acf" -> ((s, dir) =>
-      Detectors.seasonalityAcf(dense(s, dir), S, Seq(24, 168))),
+      Detectors.seasonalityAcf(Tables.denseHourly(s, dir), S, Seq(24, 168))),
 
     "q_anomaly_window" -> ((s, dir) =>
       Detectors.anomalyWindows(hourly(s, dir), S, 2.0)
@@ -164,7 +163,7 @@ object DetectorQueries {
           col("npoints"), col("peak_z"))),
 
     "q_bocpd" -> ((s, dir) =>
-      Bocpd.detect(dense(s, dir), S, hazard = 0.01, topK = 3)
+      Bocpd.detect(Tables.denseHourly(s, dir), S, hazard = 0.01, topK = 3)
         .select(col("event_type"), epochS("ts"), col("value"), col("cp_prob"))),
 
     // tsfeatures get_bocp_detector (tsfeatures.py:1569): changepoint
@@ -172,7 +171,7 @@ object DetectorQueries {
     // threshold (bocpd.py default) — the same posterior kernel as
     // q_bocpd, aggregated per series
     "q_feat_bocp" -> ((s, dir) =>
-      Bocpd.scores(dense(s, dir), S, hazard = 0.01)
+      Bocpd.scores(Tables.denseHourly(s, dir), S, hazard = 0.01)
         .groupBy("event_type").agg(
           sum(when(col("cp_prob") >= 0.5, 1).otherwise(0)).cast("long").as("bocp_num"),
           round(coalesce(max(when(col("cp_prob") >= 0.5, col("cp_prob"))), lit(0.0)), 6)
@@ -185,12 +184,12 @@ object DetectorQueries {
           round(max(col("cp_prob")), 6).as("bocp_prob_peak"))),
 
     "q_seasonality_fft" -> ((s, dir) =>
-      FftSeasonality.detect(dense(s, dir), S)),
+      FftSeasonality.detect(Tables.denseHourly(s, dir), S)),
 
     // BOCPD model family beyond Normal-mean: Bayesian-linear-regression
     // run model (trend changes) and Gamma-Poisson run model (count rates)
     "q_bocpd_trend" -> ((s, dir) =>
-      Bocpd.detectTrend(dense(s, dir), S, hazard = 0.01, topK = 3)
+      Bocpd.detectTrend(Tables.denseHourly(s, dir), S, hazard = 0.01, topK = 3)
         .select(col("event_type"), epochS("ts"), col("value"), col("cp_prob"))),
 
     "q_bocpd_poisson" -> ((s, dir) =>

@@ -29,8 +29,6 @@ import org.apache.spark.sql.functions._
 object DriftQueries {
   private val S = TSSchema(keys = Seq("event_type"))
   private val H = Tables.hourlySql
-  private def dense(s: SparkSession, dir: String) =
-    TS.fillGaps(Tables.hourlyEvents(s, dir).drop("n"), S, 3600L, Some(0.0))
 
   /** Hampel: centered half-window and the Gaussian MAD scale. */
   private val HampelK = 5
@@ -65,7 +63,7 @@ object DriftQueries {
     "q_hampel" -> ((s, dir) => {
       val w = Window.partitionBy("event_type").orderBy("ts")
         .rowsBetween(-HampelK, HampelK)
-      val withMed = dense(s, dir)
+      val withMed = Tables.denseHourly(s, dir)
         .withColumn("_frame", sort_array(collect_list("value").over(w)))
         .withColumn("med", medSorted(col("_frame")))
       val withMad = withMed
@@ -86,7 +84,7 @@ object DriftQueries {
     // 20-term sequential sum the oracle replays in the same order. ──
     "q_ks_test" -> ((s, dir) => {
       val wo = Window.partitionBy("event_type").orderBy("ts")
-      val half = dense(s, dir)
+      val half = Tables.denseHourly(s, dir)
         .withColumn("rn", row_number().over(wo))
         .withColumn("n", count(lit(1)).over(Window.partitionBy("event_type")))
         .withColumn("grp", when(col("rn") <= col("n") / 2, 1).otherwise(2))
@@ -159,7 +157,7 @@ object DriftQueries {
         }
         (alarmI, alarmTs, maxGap, lambda)
       }
-      SeriesOps.collect(dense(s, dir), S)
+      SeriesOps.collect(Tables.denseHourly(s, dir), S)
         .withColumn("_r", fn(transform(col("tss"), t => unix_timestamp(t)), col("xs")))
         .select(col("event_type"), col("_r._1").as("alarm_idx"), col("_r._2").as("alarm_ts"),
           round(col("_r._3"), 6).as("max_gap"), round(col("_r._4"), 6).as("lambda"),
@@ -176,7 +174,7 @@ object DriftQueries {
     // recursive CTE, then expands pools back to points. One series
     // shuffle; O(n) kernel per collected series. ──
     "q_isotonic" -> ((s, dir) => {
-      val iso = SeriesOps.mapSeries(dense(s, dir), S, "iso_fit") { xs =>
+      val iso = SeriesOps.mapSeries(Tables.denseHourly(s, dir), S, "iso_fit") { xs =>
         val n = xs.length
         val sums = scala.collection.mutable.ArrayBuffer.empty[Long]
         val cnts = scala.collection.mutable.ArrayBuffer.empty[Long]

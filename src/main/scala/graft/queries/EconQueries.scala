@@ -58,7 +58,7 @@ object EconQueries {
 
     "q_tsb" -> ((s, dir) => {
       val S = TSSchema(keys = Seq("event_type"))
-      val dense = TS.fillGaps(Tables.hourlyEvents(s, dir).drop("n"), S, 3600L, Some(0.0))
+      val dense = Tables.denseHourly(s, dir)
       SeriesOps.aggSeries(dense, S,
         Seq("n_periods", "n_nonzero", "p_hat", "z_hat", "tsb")) { xs =>
         graft.models.Tsb.fit(xs)
@@ -122,7 +122,7 @@ object EconQueries {
     // recursive CTE over lists (same ascending-index float order).
     "q_haar_energy" -> ((s, dir) => {
       val S = TSSchema(keys = Seq("event_type"))
-      val dense = TS.fillGaps(Tables.hourlyEvents(s, dir).drop("n"), S, 3600L, Some(0.0))
+      val dense = Tables.denseHourly(s, dir)
       val fn = udf { xs: Seq[Double] =>
         var m = 1
         while (m * 2 <= xs.length && m * 2 <= 512) m *= 2

@@ -47,7 +47,7 @@ object EsdQueries {
     // loop has NO float accumulation — engine-exact without snapping;
     // Rosner's λ gate runs in CDF space exactly as q_esd_outliers. ──
     "q_sesd" -> ((s, dir) => {
-      val dense = TS.fillGaps(Tables.hourlyEvents(s, dir).drop("n"), S, 3600L, Some(0.0))
+      val dense = Tables.denseHourly(s, dir)
       val hod = dense.groupBy(col("event_type"), hour(col("ts")).as("h"))
         .agg(round(avg("value"), 6).as("seas"))
       val med = SeriesOps.collect(dense, S)

@@ -19,8 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object EvalQueries {
   private val S = TSSchema(keys = Seq("event_type"))
-  private def dense(s: SparkSession, dir: String) =
-    TS.fillGaps(Tables.hourlyEvents(s, dir).drop("n"), S, 3600L, Some(0.0))
   private val H = Tables.hourlySql
 
   private val denseSql = Tables.denseHourlySql
@@ -49,7 +47,7 @@ object EvalQueries {
       import EvalSql._
       val w = Window.partitionBy("event_type").orderBy("ts")
       val wk = Window.partitionBy("event_type")
-      val base = dense(s, dir)
+      val base = Tables.denseHourly(s, dir)
         .withColumn("rn", row_number().over(w).cast("long"))
         .withColumn("nt", count(lit(1)).over(wk) - holdout)
       val fit = base.where(col("rn") <= col("nt")).groupBy("event_type").agg(
@@ -98,7 +96,7 @@ object EvalQueries {
       val w = Window.partitionBy("event_type").orderBy("ts")
       val wk = Window.partitionBy("event_type")
       val alphas = (1 to 9).map(_ / 10.0)
-      val base = dense(s, dir)
+      val base = Tables.denseHourly(s, dir)
         .withColumn("rn", row_number().over(w).cast("long"))
         .withColumn("nt", count(lit(1)).over(wk) - holdout)
       val fit = base.where(col("rn") <= col("nt"))

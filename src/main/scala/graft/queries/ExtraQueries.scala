@@ -14,14 +14,13 @@ import org.apache.spark.sql.functions._
 object ExtraQueries {
   private val S = TSSchema(keys = Seq("event_type"))
   private def hourly(s: SparkSession, dir: String) = Tables.hourlyEvents(s, dir).drop("n")
-  private def dense(s: SparkSession, dir: String) = TS.fillGaps(hourly(s, dir), S, 3600L, Some(0.0))
   private val H = Tables.hourlySql
   private val Cut = "2024-01-16 00:00:00"
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // exact-OLS global AR (oracle-replayable normal equations); the MLlib
     // LinearRegression variant (MlAr.forecast) is spec-validated against it
-    "q_ml_ar" -> ((s, dir) => MlAr.forecastExact(dense(s, dir), S)),
+    "q_ml_ar" -> ((s, dir) => MlAr.forecastExact(Tables.denseHourly(s, dir), S)),
 
     // cupik Pipeline (utils/cupik.py): remover → model chained as ONE
     // composed plan — IQR outlier removal with interpolation (the
@@ -62,7 +61,7 @@ object ExtraQueries {
         .select(col("event_type"), unix_timestamp(col("ts")).as("ts_s"), col("value"),
           col("rho"), col("trend3"), col("seasonal3"), col("resid3"))),
 
-    "q_dtw_cpd" -> ((s, dir) => DtwCpd.detect(dense(s, dir), S, w = 24, band = 4)),
+    "q_dtw_cpd" -> ((s, dir) => DtwCpd.detect(Tables.denseHourly(s, dir), S, w = 24, band = 4)),
 
     "q_simulate_arima" -> ((s, dir) => {
       // library simulator exercised through Spark: simulate per (phi, seed)
@@ -217,10 +216,7 @@ object ExtraQueries {
     def fitOf(prefix: String): String =
       basis.zipWithIndex.map { case (c, i) => s"be.b[${i + 1}] * $prefix$c" }.mkString(" + ")
     s"""WITH RECURSIVE hourly AS ($H),
-       |hb AS (SELECT event_type, min(ts) t0, max(ts) t1 FROM hourly GROUP BY 1),
-       |hgrid AS (SELECT event_type, unnest(generate_series(t0, t1, INTERVAL 1 HOUR)) AS ts FROM hb),
-       |dense AS (SELECT g.event_type, g.ts, coalesce(h.value, 0.0) AS value
-       |          FROM hgrid g LEFT JOIN hourly h ON g.event_type = h.event_type AND g.ts = h.ts),
+       |${Tables.denseHourlySql},
        |f AS (SELECT event_type, ts, value,
        |  lag(value, 1) OVER w AS lag1, lag(value, 2) OVER w AS lag2, lag(value, 24) OVER w AS lag24,
        |  sin(hour(ts) * (2 * pi() / 24)) AS hs, cos(hour(ts) * (2 * pi() / 24)) AS hc,

@@ -23,8 +23,6 @@ object MiningQueries {
   private val S = TSSchema(keys = Seq("event_type"))
   private def docs(s: SparkSession, dir: String) = Tables.documents(s, dir)
   private def embs(s: SparkSession, dir: String) = Tables.embeddings(s, dir)
-  private def dense(s: SparkSession, dir: String) =
-    TS.fillGaps(Tables.hourlyEvents(s, dir).drop("n"), S, 3600L, Some(0.0))
 
   /** Top-k TF-IDF terms kept per document. */
   private val TfK = 3
@@ -103,7 +101,7 @@ object MiningQueries {
     // emitted distance is recomputed from the rounded d² — fully
     // engine-stable. ──
     "q_matrix_profile" -> ((s, dir) => {
-      SeriesOps.collect(dense(s, dir), S)
+      SeriesOps.collect(Tables.denseHourly(s, dir), S)
         .withColumn("_w", explode(mpUdf(col("xs"))))
         .select(col("event_type"), col("_w._1").as("idx"),
           col("_w._2").as("mp_dist"), col("_w._3").as("nn_idx"))
@@ -117,7 +115,7 @@ object MiningQueries {
     // the already-6-dp-rounded distance (idx-asc tie-break), engine-stable
     // by the same discipline as the profile itself. ──
     "q_mp_discords" -> ((s, dir) => {
-      val prof = SeriesOps.collect(dense(s, dir), S)
+      val prof = SeriesOps.collect(Tables.denseHourly(s, dir), S)
         .withColumn("_w", explode(mpUdf(col("xs"))))
         .select(col("event_type"), col("_w._1").as("idx"),
           col("_w._2").as("mp_dist"), col("_w._3").as("nn_idx"))

@@ -17,7 +17,6 @@ import org.apache.spark.sql.functions._
 object ModelQueries {
   private val S = TSSchema(keys = Seq("event_type"))
   private def hourly(s: SparkSession, dir: String) = Tables.hourlyEvents(s, dir).drop("n")
-  private def dense(s: SparkSession, dir: String) = TS.fillGaps(hourly(s, dir), S, 3600L, Some(0.0))
   private val H = Tables.hourlySql
 
   // ---- Spark-side closed-form fits ------------------------------------
@@ -259,7 +258,7 @@ object ModelQueries {
       // the gate runs on the GAP-FREE grid: seasonalityAcf lags rows, so
       // lag 24 only means "24 hours" on a dense series (q_seasonality_acf
       // makes the same choice); decompose/fits stay on hourly like q_stlf
-      val gate = graft.detectors.Detectors.seasonalityAcf(dense(s, dir), S, Seq(24))
+      val gate = graft.detectors.Detectors.seasonalityAcf(Tables.denseHourly(s, dir), S, Seq(24))
         .select(col("event_type"), col("seasonal").as("is_seasonal"))
       val dec = Decompose.additive(h, S)
       val dsv = dec.join(broadcast(gate), "event_type")
@@ -313,7 +312,7 @@ object ModelQueries {
       }),
 
     "q_holtwinters" -> ((s, dir) =>
-      SeriesOps.aggSeries(dense(s, dir), S, Seq("level", "trend", "yhat_1", "yhat_24")) { xs =>
+      SeriesOps.aggSeries(Tables.denseHourly(s, dir), S, Seq("level", "trend", "yhat_1", "yhat_24")) { xs =>
         val m = 24
         val (l, b, seas) = Smoothers.holtWinters(xs, m, 0.3, 0.05, 0.1)
         val n = xs.length
@@ -327,7 +326,7 @@ object ModelQueries {
       }),
 
     "q_harmonic_regression" -> ((s, dir) =>
-      SeriesOps.aggSeries(dense(s, dir), S, Seq("yhat_1", "yhat_24", "r2")) { xs =>
+      SeriesOps.aggSeries(Tables.denseHourly(s, dir), S, Seq("yhat_1", "yhat_24", "r2")) { xs =>
         val (fc, r2) = Regressors.harmonic(xs, period = 24, orders = 3, h = 24)
         Array(fc(0), fc(23), r2)
       }),
@@ -338,7 +337,7 @@ object ModelQueries {
     // + argmin objective. n_active counts the surviving (nonzero)
     // changepoints — the sparsity the Laplace prior exists to produce.
     "q_prophet_lite" -> ((s, dir) =>
-      SeriesOps.aggSeries(dense(s, dir), S, Seq("n_active", "yhat_1", "yhat_12", "yhat_24")) { xs =>
+      SeriesOps.aggSeries(Tables.denseHourly(s, dir), S, Seq("n_active", "yhat_1", "yhat_12", "yhat_24")) { xs =>
         val (na, fc) = Regressors.prophetMap(xs, period = 24, orders = 3, nChangepoints = 4, h = 24)
         Array(na.toDouble, fc(0), fc(11), fc(23))
       }.withColumn("n_active", col("n_active").cast("long"))),
@@ -347,7 +346,7 @@ object ModelQueries {
     // Laplace-MAP fit on the logit of the capacity share, back through
     // cap·σ(ẑ) — forecasts saturate below cap by construction
     "q_prophet_logistic" -> ((s, dir) =>
-      SeriesOps.aggSeries(dense(s, dir), S, Seq("cap", "n_active", "yhat_1", "yhat_12", "yhat_24")) { xs =>
+      SeriesOps.aggSeries(Tables.denseHourly(s, dir), S, Seq("cap", "n_active", "yhat_1", "yhat_12", "yhat_24")) { xs =>
         val (cap, na, fc) = Regressors.prophetLogisticMap(xs, period = 24, orders = 3, nChangepoints = 4, h = 24)
         Array(cap, na.toDouble, fc(0), fc(11), fc(23))
       }.withColumn("n_active", col("n_active").cast("long"))),
@@ -374,7 +373,7 @@ object ModelQueries {
       }),
 
     "q_holtwinters_opt" -> ((s, dir) =>
-      SeriesOps.aggSeries(dense(s, dir), S,
+      SeriesOps.aggSeries(Tables.denseHourly(s, dir), S,
         Seq("alpha", "beta", "gamma", "level", "trend", "yhat_1", "yhat_24")) { xs =>
         val m = 24
         val (a, b, g, l, tr, seas, _) = Smoothers.holtWintersOpt(xs, m)
@@ -422,7 +421,7 @@ object ModelQueries {
     // prophet-residual anomaly detector (prophet_detector.py): per-row
     // fitted values of the prophetLite model, residual z-scores, |z| > 3
     "q_prophet_detector" -> ((s, dir) => {
-      val fitted = SeriesOps.mapSeries(dense(s, dir), S, "fitted") { xs =>
+      val fitted = SeriesOps.mapSeries(Tables.denseHourly(s, dir), S, "fitted") { xs =>
         Regressors.prophetLiteFitted(xs, period = 24, orders = 3, nChangepoints = 4)
       }
       val wk = Window.partitionBy("event_type")
@@ -436,7 +435,7 @@ object ModelQueries {
 
     // SARIMA-lite (1,1,0)(1,1,0)_24 additive AR (sarima.py re-derived)
     "q_sarima" -> ((s, dir) =>
-      SeriesOps.aggSeries(dense(s, dir), S, Seq("c", "phi", "sphi", "sigma2", "yhat_1", "yhat_24")) { xs =>
+      SeriesOps.aggSeries(Tables.denseHourly(s, dir), S, Seq("c", "phi", "sphi", "sigma2", "yhat_1", "yhat_24")) { xs =>
         val (c, p, sp, s2) = Regressors.sarimaFit(xs, 24)
         val fc = Regressors.sarimaForecast(xs, 24, 24)
         Array(c, p, sp, s2, fc(0), fc(23))
@@ -445,7 +444,7 @@ object ModelQueries {
     // broader order: SARIMA-lite (2,1,0)(1,1,0)_24 — the generalized
     // AR(p) kernel, ridged normal equations shared with the oracle
     "q_sarima2" -> ((s, dir) =>
-      SeriesOps.aggSeries(dense(s, dir), S,
+      SeriesOps.aggSeries(Tables.denseHourly(s, dir), S,
         Seq("c", "phi1", "phi2", "sphi", "sigma2", "yhat_1", "yhat_24")) { xs =>
         val (b, s2) = Regressors.sarimaFitP(xs, 24, 2)
         val fc = Regressors.sarimaForecastP(xs, 24, 2, 24)
@@ -1067,10 +1066,7 @@ object ModelQueries {
       }.mkString(",\n           ")
       val fitExpr = (1 to p).map(j => s"bs.b$j * be.b[$j]").mkString(" + ")
       s"""WITH RECURSIVE hourly AS ($H),
-         |hb AS (SELECT event_type, min(ts) t0, max(ts) t1 FROM hourly GROUP BY 1),
-         |hgrid AS (SELECT event_type, unnest(generate_series(t0, t1, INTERVAL 1 HOUR)) AS ts FROM hb),
-         |dense AS (SELECT g.event_type, g.ts, coalesce(h.value, 0.0) AS value
-         |          FROM hgrid g LEFT JOIN hourly h ON g.event_type = h.event_type AND g.ts = h.ts),
+         |${Tables.denseHourlySql},
          |ord AS (SELECT event_type, ts, value AS y,
          |  row_number() OVER (PARTITION BY event_type ORDER BY ts) - 1 AS t,
          |  count(*) OVER (PARTITION BY event_type) AS n FROM dense),
@@ -1094,10 +1090,7 @@ object ModelQueries {
 
     "q_sarima2" ->
       s"""WITH RECURSIVE hourly AS ($H),
-         |hb AS (SELECT event_type, min(ts) t0, max(ts) t1 FROM hourly GROUP BY 1),
-         |hgrid AS (SELECT event_type, unnest(generate_series(t0, t1, INTERVAL 1 HOUR)) AS ts FROM hb),
-         |dense AS (SELECT g.event_type, g.ts, coalesce(h.value, 0.0) AS value
-         |          FROM hgrid g LEFT JOIN hourly h ON g.event_type = h.event_type AND g.ts = h.ts),
+         |${Tables.denseHourlySql},
          |ord AS (SELECT event_type, value,
          |  row_number() OVER (PARTITION BY event_type ORDER BY ts) - 1 AS t,
          |  count(*) OVER (PARTITION BY event_type) AS n FROM dense),
@@ -1154,10 +1147,7 @@ object ModelQueries {
 
     "q_sarima" ->
       s"""WITH RECURSIVE hourly AS ($H),
-         |hb AS (SELECT event_type, min(ts) t0, max(ts) t1 FROM hourly GROUP BY 1),
-         |hgrid AS (SELECT event_type, unnest(generate_series(t0, t1, INTERVAL 1 HOUR)) AS ts FROM hb),
-         |dense AS (SELECT g.event_type, g.ts, coalesce(h.value, 0.0) AS value
-         |          FROM hgrid g LEFT JOIN hourly h ON g.event_type = h.event_type AND g.ts = h.ts),
+         |${Tables.denseHourlySql},
          |ord AS (SELECT event_type, value,
          |  row_number() OVER (PARTITION BY event_type ORDER BY ts) - 1 AS t,
          |  count(*) OVER (PARTITION BY event_type) AS n FROM dense),
@@ -1238,10 +1228,7 @@ object ModelQueries {
           s"be.b[${2 * k}] * sin(2 * pi() * $k * $tt / 24) + be.b[${2 * k + 1}] * cos(2 * pi() * $k * $tt / 24)").mkString(" + ")
       val fitExpr = (1 to 7).map(j => s"bs.b$j * be.b[$j]").mkString(" + ")
       s"""WITH RECURSIVE hourly AS ($H),
-         |hb AS (SELECT event_type, min(ts) t0, max(ts) t1 FROM hourly GROUP BY 1),
-         |hgrid AS (SELECT event_type, unnest(generate_series(t0, t1, INTERVAL 1 HOUR)) AS ts FROM hb),
-         |dense AS (SELECT g.event_type, g.ts, coalesce(h.value, 0.0) AS value
-         |          FROM hgrid g LEFT JOIN hourly h ON g.event_type = h.event_type AND g.ts = h.ts),
+         |${Tables.denseHourlySql},
          |ord AS (SELECT event_type, value AS y,
          |  row_number() OVER (PARTITION BY event_type ORDER BY ts) - 1 AS t,
          |  count(*) OVER (PARTITION BY event_type) AS n FROM dense),
@@ -1265,10 +1252,7 @@ object ModelQueries {
 
     "q_prophet_lite" -> {
       s"""WITH RECURSIVE hourly AS ($H),
-         |hb AS (SELECT event_type, min(ts) t0, max(ts) t1 FROM hourly GROUP BY 1),
-         |hgrid AS (SELECT event_type, unnest(generate_series(t0, t1, INTERVAL 1 HOUR)) AS ts FROM hb),
-         |dense AS (SELECT g.event_type, g.ts, coalesce(h.value, 0.0) AS value
-         |          FROM hgrid g LEFT JOIN hourly h ON g.event_type = h.event_type AND g.ts = h.ts),
+         |${Tables.denseHourlySql},
          |ord AS (SELECT event_type, value AS y,
          |  row_number() OVER (PARTITION BY event_type ORDER BY ts) - 1 AS t,
          |  count(*) OVER (PARTITION BY event_type) AS n FROM dense),
@@ -1286,10 +1270,7 @@ object ModelQueries {
       def back(tt: String): String =
         s"cp.cap / (1.0 + exp(-((${prophetFcExpr(tt)}) * f.yscale)))"
       s"""WITH RECURSIVE hourly AS ($H),
-         |hb AS (SELECT event_type, min(ts) t0, max(ts) t1 FROM hourly GROUP BY 1),
-         |hgrid AS (SELECT event_type, unnest(generate_series(t0, t1, INTERVAL 1 HOUR)) AS ts FROM hb),
-         |dense AS (SELECT g.event_type, g.ts, coalesce(h.value, 0.0) AS value
-         |          FROM hgrid g LEFT JOIN hourly h ON g.event_type = h.event_type AND g.ts = h.ts),
+         |${Tables.denseHourlySql},
          |ord0 AS (SELECT event_type, value,
          |  1.1 * max(value) OVER (PARTITION BY event_type) AS cap,
          |  row_number() OVER (PARTITION BY event_type ORDER BY ts) - 1 AS t,
@@ -1397,10 +1378,7 @@ object ModelQueries {
       val sCarry = (1 to 24).map(i => s"r.s$i").mkString(", ")
       def sAt(idx: String) = "CASE " + (1 to 24).map(i => s"WHEN ($idx) = ${i - 1} THEN s$i").mkString(" ") + " END"
       s"""WITH RECURSIVE hourly AS ($H),
-         |hb AS (SELECT event_type, min(ts) t0, max(ts) t1 FROM hourly GROUP BY 1),
-         |hgrid AS (SELECT event_type, unnest(generate_series(t0, t1, INTERVAL 1 HOUR)) AS ts FROM hb),
-         |dense AS (SELECT g.event_type, g.ts, coalesce(h.value, 0.0) AS value
-         |          FROM hgrid g LEFT JOIN hourly h ON g.event_type = h.event_type AND g.ts = h.ts),
+         |${Tables.denseHourlySql},
          |ord AS (SELECT event_type, value,
          |  row_number() OVER (PARTITION BY event_type ORDER BY ts) - 1 AS t,
          |  count(*) OVER (PARTITION BY event_type) AS n FROM dense),

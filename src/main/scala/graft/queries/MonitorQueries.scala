@@ -92,8 +92,7 @@ object MonitorQueries {
     // 6-dp-rounded group mean broadcast back over the grid — two
     // vocabulary-sized joins, one series shuffle. ──
     "q_mstl" -> ((s, dir) => {
-      val dense = TS.fillGaps(Tables.hourlyEvents(s, dir).drop("n"),
-        TSSchema(keys = Seq("event_type")), 3600L, Some(0.0))
+      val dense = Tables.denseHourly(s, dir)
         .withColumn("hod", hour(col("ts")))
         .withColumn("how", (((unix_timestamp(col("ts")) / 3600).cast("long") + 72) % 168).cast("int"))
       val s24 = dense.groupBy("event_type", "hod").agg(round(avg("value"), 6).as("seas24"))

@@ -38,15 +38,11 @@ object NonparamQueries {
 
   private val H = Tables.hourlySql
 
-  private def dense(s: SparkSession, dir: String): DataFrame =
-    TS.fillGaps(Tables.hourlyEvents(s, dir).drop("n"),
-      TSSchema(keys = Seq("event_type")), 3600L, Some(0.0))
-
   /** Dense halves with the q_ks_test split convention: row_number over
     * the dense grid, first half rn <= n/2. */
   private def halves(s: SparkSession, dir: String): DataFrame = {
     val wo = Window.partitionBy("event_type").orderBy("ts")
-    dense(s, dir)
+    Tables.denseHourly(s, dir)
       .withColumn("rn", row_number().over(wo))
       .withColumn("nn", count(lit(1)).over(Window.partitionBy("event_type")))
       .withColumn("grp", when(col("rn") <= col("nn") / 2, 1).otherwise(2))
@@ -226,7 +222,7 @@ object NonparamQueries {
       val B = 200
       val w = Window.partitionBy("event_type").orderBy("ts")
       val base = graft.Scratch.materialize(
-        dense(s, dir)
+        Tables.denseHourly(s, dir)
           .withColumn("rn", row_number().over(w))
           .withColumn("bsum", round(sum("value").over(
             w.rowsBetween(Window.currentRow, L - 1)), 4))

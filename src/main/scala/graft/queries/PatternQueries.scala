@@ -28,8 +28,6 @@ import org.apache.spark.sql.functions._
 object PatternQueries {
   private val S = TSSchema(keys = Seq("event_type"))
   private val H = Tables.hourlySql
-  private def dense(s: SparkSession, dir: String) =
-    TS.fillGaps(Tables.hourlyEvents(s, dir).drop("n"), S, 3600L, Some(0.0))
 
   /** Association-rule thresholds: min basket support of the PAIR. */
   private val MinSupport = 0.05
@@ -86,7 +84,7 @@ object PatternQueries {
     "q_sax_words" -> ((s, dir) => {
       val w = Window.partitionBy("event_type")
       val wo = Window.partitionBy("event_type").orderBy("ts")
-      val z = dense(s, dir)
+      val z = Tables.denseHourly(s, dir)
         .withColumn("mu", avg("value").over(w))
         .withColumn("sd", stddev_pop("value").over(w))
         .withColumn("zi", round(round((col("value") - col("mu")) / col("sd"), 6) * 1e6).cast("long"))

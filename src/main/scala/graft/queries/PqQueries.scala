@@ -53,17 +53,23 @@ object PqQueries {
        |book$pfx$j AS (SELECT row_number() OVER (ORDER BY cell) - 1 AS pos, centroid FROM cents$pfx${j}_$ITERS)""".stripMargin
   }
 
+  // each query persists the corpus (and q_ann_ivfpq its residuals) for the
+  // codebook fits only, and unpersists before returning, as q_ann_ivf does
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_ann_pq" -> ((s, dir) => {
       val e = embs(s, dir).select(col("vec_id"), col("embedding")).persist()
       val cb = Pq.fitCodebooks(e, M, KS, ITERS)
-      Pq.adcTopK(Pq.encode(e, cb), graft.ann.Ann.probeSample(e), cb, TOPK)
+      val out = Pq.adcTopK(Pq.encode(e, cb), graft.ann.Ann.probeSample(e), cb, TOPK)
+      e.unpersist()
+      out
     }),
 
     "q_ann_pq_rerank" -> ((s, dir) => {
       val e = embs(s, dir).select(col("vec_id"), col("embedding")).persist()
       val cb = Pq.fitCodebooks(e, M, KS, ITERS)
-      Pq.adcRerankTopK(Pq.encode(e, cb), e, graft.ann.Ann.probeSample(e), cb, CAND, TOPK)
+      val out = Pq.adcRerankTopK(Pq.encode(e, cb), e, graft.ann.Ann.probeSample(e), cb, CAND, TOPK)
+      e.unpersist()
+      out
     }),
 
     "q_ann_ivfpq" -> ((s, dir) => {
@@ -75,8 +81,11 @@ object PqQueries {
       val cents = centsDf.collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
       val resid = Pq.residuals(graft.ann.KMeansDet.assign(e, centsDf), centsDf).persist()
       val cb = Pq.fitCodebooks(resid, M, KS, ITERS)
-      Pq.adcIvfTopK(Pq.encode(resid, cb, keep = Seq("cell")), cents, cb,
+      val out = Pq.adcIvfTopK(Pq.encode(resid, cb, keep = Seq("cell")), cents, cb,
         graft.ann.Ann.probeSample(e), NPROBE, TOPK)
+      resid.unpersist()
+      e.unpersist()
+      out
     })
   )
 

@@ -15,8 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object ReconQueries {
   private val S = TSSchema(keys = Seq("event_type"))
-  private def dense(s: SparkSession, dir: String) =
-    TS.fillGaps(Tables.hourlyEvents(s, dir).drop("n"), S, 3600L, Some(0.0))
   private val H = Tables.hourlySql
 
   private val denseSql = Tables.denseHourlySql
@@ -105,7 +103,7 @@ object ReconQueries {
       import ReconSql._
       val w = Window.partitionBy("event_type").orderBy("ts")
       val wk = Window.partitionBy("event_type")
-      val lv = dense(s, dir)
+      val lv = Tables.denseHourly(s, dir)
         .withColumn("rn", row_number().over(w) - 1)
         .withColumn("nn", count(lit(1)).over(wk))
         .withColumn("lvl", explode(array(lit(1), lit(2), lit(4))))
@@ -140,7 +138,7 @@ object ReconQueries {
       val w = Window.partitionBy("event_type").orderBy("ts")
       val wk = Window.partitionBy("event_type")
       // trim to the last (n_block+1)*24 points, n_block = nn div 24 - 1
-      val base = dense(s, dir)
+      val base = Tables.denseHourly(s, dir)
         .withColumn("rn", row_number().over(w) - 1)
         .withColumn("nn", count(lit(1)).over(wk))
         .withColumn("nb", expr(s"nn div $blockSize - 1"))

@@ -35,7 +35,6 @@ import org.apache.spark.sql.functions._
 object RobustQueries {
   private val S = TSSchema(keys = Seq("event_type"))
   private def hourly(s: SparkSession, dir: String) = Tables.hourlyEvents(s, dir).drop("n")
-  private def dense(s: SparkSession, dir: String) = TS.fillGaps(hourly(s, dir), S, 3600L, Some(0.0))
   private val H = Tables.hourlySql
   private def epochS(c: String, as: String = "ts_s") = unix_timestamp(col(c)).as(as)
 
@@ -83,7 +82,7 @@ object RobustQueries {
     // ── MKDetector chain: trailing MA(7) → SES(0.2) fitted → MK test ──
     "q_mk_deseason" -> ((s, dir) => {
       val w = Window.partitionBy("event_type").orderBy("ts")
-      val ma = dense(s, dir)
+      val ma = Tables.denseHourly(s, dir)
         .withColumn("rn", row_number().over(w))
         .withColumn("ma", round(avg("value").over(w.rowsBetween(-6, 0)), 6))
         .where(col("rn") >= 7)

@@ -45,12 +45,6 @@ object ScanQueries {
   /** ESS autocorrelation horizon. */
   private val K = 24
 
-  /** Dense zero-filled hourly grid (the TS.fillGaps twin of
-    * Tables.denseHourlySql). */
-  private def dense(s: SparkSession, dir: String): DataFrame =
-    graft.TS.fillGaps(Tables.hourlyEvents(s, dir).drop("n"),
-      graft.TSSchema(keys = Seq("event_type")), 3600L, Some(0.0))
-
   /** Lanczos Γ(z) for z in (0.5, 1.5) (g = 7, 9 coefficients) as an
     * engine-shared SQL fragment — every literal E-notation so Spark's
     * expr() never falls into DECIMAL arithmetic. */
@@ -263,7 +257,7 @@ object ScanQueries {
     // identity; the log-log fit runs on a 4-row frame. One window pass
     // + one (series, s, box) aggregation.
     "q_dfa" -> ((s, dir) => {
-      val dense0 = dense(s, dir)
+      val dense0 = Tables.denseHourly(s, dir)
       val wp = Window.partitionBy("event_type")
       val wo = Window.partitionBy("event_type").orderBy("ts")
       val prof = dense0
@@ -316,7 +310,7 @@ object ScanQueries {
     // of snapped-value comparisons from ONE O(n²) key-equality self-join
     // per series (n = dense grid, time-span-bounded).
     "q_sampen" -> ((s, dir) => {
-      val mom = dense(s, dir).groupBy("event_type").agg(
+      val mom = Tables.denseHourly(s, dir).groupBy("event_type").agg(
         count(lit(1)).as("n"),
         round(sum("value"), 4).as("sv"),
         round(sum(col("value") * col("value")), 2).as("svv"))
@@ -348,7 +342,7 @@ object ScanQueries {
         }
         Seq(bc, ac)
       }
-      graft.SeriesOps.collect(dense(s, dir), graft.TSSchema(keys = Seq("event_type")))
+      graft.SeriesOps.collect(Tables.denseHourly(s, dir), graft.TSSchema(keys = Seq("event_type")))
         .join(broadcast(mom), "event_type")
         .withColumn("c", sampenCounts(col("xs"), col("r")))
         .select(col("event_type"), col("n"), col("r"),

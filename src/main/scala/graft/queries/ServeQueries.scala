@@ -18,14 +18,12 @@ import org.apache.spark.sql.functions._
   */
 object ServeQueries {
   private val S = TSSchema(keys = Seq("event_type"))
-  private def dense(s: SparkSession, dir: String) =
-    TS.fillGaps(Tables.hourlyEvents(s, dir).drop("n"), S, 3600L, Some(0.0))
   private val H = Tables.hourlySql
   private val Thr = graft.detectors.CusumV2.LlrThreshold
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_cusum_serve" -> ((s, dir) => {
-      val ser = dense(s, dir).groupBy("event_type")
+      val ser = Tables.denseHourly(s, dir).groupBy("event_type")
         .agg(sort_array(collect_list(struct(col("ts").as("t"),
           col("value").cast("double").as("x")))).as("p"))
         .select(col("event_type"),

@@ -235,8 +235,7 @@ object StabilityQueries {
     "q_capability" -> ((s, dir) => {
       val wo = Window.partitionBy("event_type").orderBy("ts")
       val wp = Window.partitionBy("event_type")
-      val dense = graft.TS.fillGaps(Tables.hourlyEvents(s, dir).drop("n"),
-        graft.TSSchema(keys = Seq("event_type")), 3600L, Some(0.0))
+      val dense = Tables.denseHourly(s, dir)
       val half = dense
         .withColumn("rn", row_number().over(wo))
         .withColumn("nn", count(lit(1)).over(wp))
@@ -277,8 +276,7 @@ object StabilityQueries {
     // comparisons. One window pass. ──
     "q_tracking_signal" -> ((s, dir) => {
       val wo = Window.partitionBy("event_type").orderBy("ts")
-      val dense = graft.TS.fillGaps(Tables.hourlyEvents(s, dir).drop("n"),
-        graft.TSSchema(keys = Seq("event_type")), 3600L, Some(0.0))
+      val dense = Tables.denseHourly(s, dir)
       val e = dense
         .withColumn("yhat", lag("value", 24).over(wo))
         .where(col("yhat").isNotNull)

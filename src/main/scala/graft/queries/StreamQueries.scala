@@ -248,7 +248,7 @@ object StreamQueries {
     "q_stream_mosum" -> ((s, dir) => {
       implicit val sqlCtx = s.sqlContext
       import s.implicits._
-      val dense = TS.fillGaps(Tables.hourlyEvents(s, dir).drop("n"), S, 3600L, Some(0.0))
+      val dense = Tables.denseHourly(s, dir)
       val store = dense.groupBy("event_type").agg(
         count(lit(1)).as("n"),
         round(sum("value"), 4).as("sv"),
@@ -273,7 +273,7 @@ object StreamQueries {
     "q_stream_page_hinkley" -> ((s, dir) => {
       implicit val sqlCtx = s.sqlContext
       import s.implicits._
-      val dense = TS.fillGaps(Tables.hourlyEvents(s, dir).drop("n"), S, 3600L, Some(0.0))
+      val dense = Tables.denseHourly(s, dir)
       val th = dense.groupBy("event_type")
         .agg(round(sum("value"), 4).as("s1"),
           round(sum(col("value") * col("value")), 4).as("s2"),
@@ -822,7 +822,7 @@ object StreamQueries {
     "q_stream_bocpd" -> ((s, dir) => {
       implicit val sqlCtx = s.sqlContext
       import s.implicits._
-      val feed = TS.fillGaps(Tables.hourlyEvents(s, dir).drop("n"), S, 3600L, Some(0.0))
+      val feed = Tables.denseHourly(s, dir)
         .orderBy("ts", "event_type").collect()
         .map(r => Point(r.getString(0), r.getTimestamp(1), r.getDouble(2))).toSeq
       val priorsDf = feed.groupBy(_.event_type).toSeq.map { case (k, pts) =>

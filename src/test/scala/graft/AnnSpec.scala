@@ -1,20 +1,10 @@
 package graft
 
 import graft.ann.{Ann, KMeansDet}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class AnnSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class AnnSpec extends AnyFunSuite with SparkSuite {
 
   /** Deterministic synthetic corpus: two noisy clusters in 16-d. */
   private def corpus(n: Int) = {

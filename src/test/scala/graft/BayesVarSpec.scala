@@ -2,8 +2,6 @@ package graft
 
 import breeze.linalg.{inv, DenseMatrix, DenseVector}
 import graft.models.GaussJordan
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q_bayes_var validation: the unrolled transform-chain Gauss-Jordan against
@@ -12,16 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (kats/models/bayesian_var.py:186 — per-t Z_tᵀ Σ⁻¹ Z_t accumulation with
   * block-diagonal Z_t), which shares no algebra with the implementation.
   */
-class BayesVarSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BayesVarSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
 

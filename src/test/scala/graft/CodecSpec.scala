@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * not trust the synthesizer's layout. Hand-built containers with known
   * pixel/PCM content probe each layout rule directly.
   */
-class CodecSpec extends AnyFunSuite {
+class CodecSpec extends AnyFunSuite with SparkSuite {
 
   test("BMP round-trip recovers dimensions and the exact top-down pixel stream") {
     for (text <- Seq("alpha", "bravo charlie", "δοκιμή unicode", "x")) {
@@ -167,42 +167,34 @@ class CodecSpec extends AnyFunSuite {
   }
 
   test("256-bit aHash: deterministic per image, identical images collide on all four words") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
-    try {
-      import spark.implicits._
-      val df = Seq((1L, "alpha"), (2L, "alpha"), (3L, "different text")).toDF("doc_id", "text")
-      val ph = Multimodal.phash256Bmp(Multimodal.withBmpPayload(df))
-        .collect().map(r => r.getLong(0) -> (1 to 4).map(r.getLong)).toMap
-      assert(ph(1L) == ph(2L), "identical payloads must produce identical 256-bit hashes")
-      assert(ph(1L) != ph(3L), "different images must differ somewhere in 256 bits")
-      // bits only exist where the integer threshold fires: at least one
-      // word nonzero (some cell above mean) and at least one bit clear
-      val totalBits = ph(1L).map(java.lang.Long.bitCount).sum
-      assert(totalBits > 0 && totalBits < 256)
-    } finally spark.stop()
+    import spark.implicits._
+    val df = Seq((1L, "alpha"), (2L, "alpha"), (3L, "different text")).toDF("doc_id", "text")
+    val ph = Multimodal.phash256Bmp(Multimodal.withBmpPayload(df))
+      .collect().map(r => r.getLong(0) -> (1 to 4).map(r.getLong)).toMap
+    assert(ph(1L) == ph(2L), "identical payloads must produce identical 256-bit hashes")
+    assert(ph(1L) != ph(3L), "different images must differ somewhere in 256 bits")
+    // bits only exist where the integer threshold fires: at least one
+    // word nonzero (some cell above mean) and at least one bit clear
+    val totalBits = ph(1L).map(java.lang.Long.bitCount).sum
+    assert(totalBits > 0 && totalBits < 256)
   }
 
   test("aHash bits derive from decoded pixels via the exact integer threshold") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
-    try {
-      import spark.implicits._
-      val df = Seq((1L, "alpha"), (2L, "alpha"), (3L, "different text")).toDF("doc_id", "text")
-      val ph = Multimodal.phashBmp(Multimodal.withBmpPayload(df))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(ph(1L) == ph(2L), "identical images must hash identically")
-      // reference recomputation straight from the decoded pixels
-      val Some((w, h, px)) = Multimodal.decodeBmp(Multimodal.encodeBmp("alpha"))
-      val luma = Array.tabulate(64) { cell =>
-        val p = (cell / 8 * h / 8) * w + (cell % 8 * w / 8)
-        299L * (px(3 * p + 2) & 0xff) + 587L * (px(3 * p + 1) & 0xff) + 114L * (px(3 * p) & 0xff)
-      }
-      val sum = luma.sum
-      val want = luma.zipWithIndex.foldLeft(0L) { case (acc, (l, c)) =>
-        if (64L * l > sum) acc | (1L << c) else acc
-      }
-      assert(ph(1L) == want)
-    } finally spark.stop()
+    import spark.implicits._
+    val df = Seq((1L, "alpha"), (2L, "alpha"), (3L, "different text")).toDF("doc_id", "text")
+    val ph = Multimodal.phashBmp(Multimodal.withBmpPayload(df))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(ph(1L) == ph(2L), "identical images must hash identically")
+    // reference recomputation straight from the decoded pixels
+    val Some((w, h, px)) = Multimodal.decodeBmp(Multimodal.encodeBmp("alpha"))
+    val luma = Array.tabulate(64) { cell =>
+      val p = (cell / 8 * h / 8) * w + (cell % 8 * w / 8)
+      299L * (px(3 * p + 2) & 0xff) + 587L * (px(3 * p + 1) & 0xff) + 114L * (px(3 * p) & 0xff)
+    }
+    val sum = luma.sum
+    val want = luma.zipWithIndex.foldLeft(0L) { case (acc, (l, c)) =>
+      if (64L * l > sum) acc | (1L << c) else acc
+    }
+    assert(ph(1L) == want)
   }
 }

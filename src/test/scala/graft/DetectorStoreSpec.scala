@@ -4,10 +4,8 @@ import graft.detectors.{Bocpd, DetectorStore}
 import graft.models.ModelStore
 import graft.streaming.StreamingDetectors
 import graft.streaming.StreamingDetectors.Point
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** DetectorStore: the distributed baseline fit must agree with the
@@ -15,17 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the point of the store — drive the streaming detectors: a stream
   * served from LOADED baselines must reproduce the batch kernel.
   */
-class DetectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DetectorStoreSpec extends AnyFunSuite with SparkSuite {
 
   private val S = TSSchema(keys = Seq("event_type"))
   private def hourly = Tables.hourlyEvents(spark, "/root/testdata/sf0.001").drop("n")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Independent validation of the drift/cleaning pack (DriftQueries):
@@ -9,17 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * statistic recomputed from the two half-sample ECDFs, and Page-Hinkley
   * alarm indices replayed by a direct reference implementation.
   */
-class DriftSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DriftSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
   private val S = TSSchema(keys = Seq("event_type"))

@@ -1,23 +1,12 @@
 package graft
 
 import graft.expressions.{ewma_array, EwmaArray}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class ExpressionSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ExpressionSpec extends AnyFunSuite with SparkSuite {
 
   /** Reference adjusted EWMA (pandas ewm(adjust=True).mean()). */
   private def refEwma(xs: Array[Double], alpha: Double): Array[Double] = {
@@ -68,7 +57,11 @@ class ExpressionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ewma_array is registered as a SQL function via GraftExtensions") {
-    val got = spark.sql("SELECT ewma_array(array(1.0d, 2.0d, 3.0d), 0.5) AS y")
+    // a new session gets only what the installed extension injects, never
+    // the lazy post-hoc registration earlier tests may have triggered here
+    val fresh = spark.newSession()
+    assert(fresh.catalog.functionExists("ewma_array"), "GraftSession did not install GraftExtensions")
+    val got = fresh.sql("SELECT ewma_array(array(1.0d, 2.0d, 3.0d), 0.5) AS y")
       .collect()(0).getSeq[Double](0).toArray
     val want = refEwma(Array(1.0, 2.0, 3.0), 0.5)
     got.zip(want).foreach { case (g, w) => assert(math.abs(g - w) < 1e-12) }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.StreamQueries
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * oracles replay as a QUALIFY row_number() CTE — and invariant under
   * partitioning.
   */
-class FeedCapSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("FeedCapSpec").getOrCreate()
+class FeedCapSpec extends AnyFunSuite with SparkSuite {
 
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

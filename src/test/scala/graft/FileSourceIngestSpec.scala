@@ -1,11 +1,10 @@
 package graft
 
 import graft.streaming.StreamingDetectors
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** VERDICT r9 #8: the replay queries certify streaming semantics through
@@ -17,17 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the sandbox allows: offsets tracked in the checkpoint, state-store
   * recovery, exactly-once file sink.
   */
-class FileSourceIngestSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class FileSourceIngestSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
   private def tmp(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString

@@ -2,9 +2,8 @@ package graft
 
 import graft.ann.{KMeansDet, Pq}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one-job Lloyd round ([[KMeansDet.fit]], [[Pq.fitCodebooks]])
@@ -14,15 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (only the summation order of the partition sums differs), the same
   * dropped cells, the same assignments; and the job count the fold buys.
   */
-class LloydRoundSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class LloydRoundSpec extends AnyFunSuite with SparkSuite {
 
   /** Seeded corpus: three noisy 16-d blobs over 4 partitions. With `dupSeed`
     * vector 1 repeats vector 0, so seed cell 1 ties cell 0 everywhere, wins

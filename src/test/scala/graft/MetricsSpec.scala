@@ -1,9 +1,7 @@
 package graft
 
 import graft.metrics.Metrics
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Percentage-metric fidelity to kats `_safe_divide` (metrics.py:137):
@@ -13,15 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * hand-computed from the numpy definitions on a 4-row fixture covering
   * every branch: y=0 with err≠0, the 0/0 row, a plain row, and y<0.
   */
-class MetricsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MetricsSpec extends AnyFunSuite with SparkSuite {
 
   // (y, f): (0,2) clamps to sign; (0,0) is the 0/0 row; (4,2) plain;
   // (-2,2) negative actual

@@ -1,9 +1,7 @@
 package graft
 
 import graft.models.MlAr
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
@@ -12,16 +10,7 @@ import java.sql.Timestamp
   * internally, so agreement is approximate but tight on a well-scaled
   * problem.
   */
-class MlArSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MlArSpec extends AnyFunSuite with SparkSuite {
 
   test("forecastExact tracks the MLlib fit") {
     import spark.implicits._

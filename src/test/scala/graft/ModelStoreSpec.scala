@@ -1,9 +1,7 @@
 package graft
 
 import graft.models.ModelStore
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ModelStore persistence contract: params survive the parquet round
@@ -11,17 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * in-memory fit, and a non-conforming table fails at load, not three
   * operators later.
   */
-class ModelStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ModelStoreSpec extends AnyFunSuite with SparkSuite {
 
   private val S = TSSchema(keys = Seq("event_type"))
   private def hourly = Tables.hourlyEvents(spark, "/root/testdata/sf0.001").drop("n")

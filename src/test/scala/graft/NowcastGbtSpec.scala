@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** models/NowcastGbt: the exact boosted-stump path must genuinely learn
@@ -9,17 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and the MLlib GBTRegressor twin must land in the same error regime —
   * the q_ml_ar exact/MLlib validation split applied to trees.
   */
-class NowcastGbtSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class NowcastGbtSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
   private val S = TSSchema(keys = Seq("event_type"))

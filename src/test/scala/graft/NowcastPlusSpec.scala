@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** models/NowcastPlus: the nowcastingplus composition must (a) recover a
@@ -10,17 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * deseasonalized diff(−1) model, (c) guard short series, and (d) be
   * deterministic on the real tables.
   */
-class NowcastPlusSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class NowcastPlusSpec extends AnyFunSuite with SparkSuite {
 
   private val T0 = 1704067200L // 2024-01-01 00:00 UTC
   private def u(es: Long): Double = ((es % 86400L) / 60L - 719.5) / 719.5

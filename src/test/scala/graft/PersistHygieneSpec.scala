@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The queries that persist intermediates for iterative fitting must not
@@ -10,22 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * evict working memory. Runs each offender end-to-end and asserts the
   * persistence registry is empty afterwards.
   */
-class PersistHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PersistHygieneSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  test("q_kmeans and q_ann_ivf leave no cached blocks behind") {
-    for (q <- Seq("q_kmeans", "q_ann_ivf")) {
+  test("q_kmeans, q_ann_ivf and the PQ queries leave no cached blocks behind") {
+    for (q <- Seq("q_kmeans", "q_ann_ivf", "q_ann_pq", "q_ann_pq_rerank", "q_ann_ivfpq")) {
       val n = SparkEntry.queries(q)(spark, sf).count()
       assert(n > 0, s"$q returned no rows")
       val leaked = spark.sparkContext.getPersistentRDDs

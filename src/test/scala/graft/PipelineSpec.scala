@@ -1,26 +1,14 @@
 package graft
 
 import graft.operators.Pipeline
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** cupik-style Pipeline: the remover step must null-and-interpolate
   * exactly the IQR outliers and nothing else, and the chained fit must
   * equal manual composition of its steps.
   */
-class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PipelineSpec extends AnyFunSuite with SparkSuite {
 
   private val S = TSSchema(keys = Seq("event_type"))
   private def hourly = Tables.hourlyEvents(spark, "/root/testdata/sf0.001").drop("n")

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Planted-truth calibration of the round-9 causal/drift operators — the
@@ -10,17 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * constructs a fixture with a KNOWN effect and asserts the operator
   * recovers it (and stays quiet on the null).
   */
-class PlantedSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PlantedSpec extends AnyFunSuite with SparkSuite {
 
   /** Deterministic uniform(0,1) noise from an integer key (splitmix-style
     * mix — a bare multiplicative LCG is AFFINE in the key, which makes

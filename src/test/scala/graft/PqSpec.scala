@@ -1,9 +1,7 @@
 package graft
 
 import graft.ann.Pq
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** PQ quality gates, on a corpus with actual neighbor structure (8
@@ -14,16 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * worst case, so quality is measured where quality is defined;
   * correctness on the testdata is the q_ann_pq oracle's job.
   */
-class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PqSpec extends AnyFunSuite with SparkSuite {
 
   /** 8 well-separated 64-d Gaussian blobs, 40 members each, shuffled ids. */
   private lazy val (corpus, blobOf) = {

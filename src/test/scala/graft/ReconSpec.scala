@@ -2,8 +2,6 @@ package graft
 
 import breeze.linalg.{DenseMatrix, DenseVector}
 import graft.queries.ReconQueries
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q_reconcile / q_ensemble_ci validation: the build-time reconciliation
@@ -11,17 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * re-derived) against its defining algebraic properties, plus end-to-end
   * coherence of the reconciled forecasts on real data.
   */
-class ReconSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ReconSpec extends AnyFunSuite with SparkSuite {
 
   // Stacked S for levels {4,2,1}, m=4, level-descending (matches ReconSql)
   private val S = DenseMatrix(

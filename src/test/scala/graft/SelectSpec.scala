@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Independent validation of the selection pack (SelectQueries): DSIR
@@ -9,17 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * including the absent-term mass (the query folds it into closed form),
   * and kNN-classify votes re-counted brute-force.
   */
-class SelectSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SelectSpec extends AnyFunSuite with SparkSuite {
 
   test("q_silhouette: scores in [-1,1], misplaced bounded, own-dist below other-dist on labeled data") {
     val rows = SparkEntry.queries("q_silhouette")(spark, dir).collect()

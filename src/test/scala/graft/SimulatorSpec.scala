@@ -3,8 +3,6 @@ package graft
 import graft.detectors.CusumV2
 import graft.operators.Simulator
 import graft.queries.SimQueries
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The simulator battery's two contracts:
@@ -18,16 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    the reference uses its simulators for (kats detector tests drive
   *    on level_shift_sim/trend_shift_sim corpora).
   */
-class SimulatorSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SimulatorSpec extends AnyFunSuite with SparkSuite {
 
   private def segStats(xs: Array[Double], bounds: Seq[Int]): Seq[(Int, Double, Double)] = {
     val bs = 0 +: bounds :+ xs.length

@@ -3,8 +3,6 @@ package graft
 import graft.expressions.{cms_sketch, hll_sketch, kmv_sketch, Sketches}
 import graft.text.TextFunctions
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Properties of the mergeable sketch aggregates that the oracle equality
@@ -13,16 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * published error bounds, KMV is exact below k, CMS never undercounts,
   * and the oracle-side HLL constant literal matches the Scala fold.
   */
-class SketchSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SketchSpec extends AnyFunSuite with SparkSuite {
 
   private def hv(c: org.apache.spark.sql.Column) = TextFunctions.hash60(c.cast("string"))
 

@@ -1,9 +1,7 @@
 package graft
 
 import graft.dedup.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Skew salting for LSH band joins: on an adversarial hot-bucket corpus
@@ -12,17 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the per-join-key candidate count, i.e. the work one task can be
   * handed.
   */
-class SkewSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SkewSpec extends AnyFunSuite with SparkSuite {
 
   /** 80 byte-identical docs (the hot bucket) + 40 distinct docs. */
   private lazy val hotCorpus = {

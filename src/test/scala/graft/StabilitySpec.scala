@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Validation of the structural-stability pack (StabilityQueries). */
-class StabilitySpec extends AnyFunSuite with BeforeAndAfterAll {
+class StabilitySpec extends AnyFunSuite with SparkSuite {
 
   test("q_capability: limits ordered, out-share consistent with cpk direction") {
     val rows = SparkEntry.queries("q_capability")(spark, dir).collect()
@@ -74,16 +72,6 @@ class StabilitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(auc > 0.5, s"AUC $auc at or below chance")
     assert(j > 0.0)
   }
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,9 +1,7 @@
 package graft
 
 import graft.queries.{AnalysisQueries, DriftQueries, StreamQueries}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The q_stream_* pack embeds a real Structured-Streaming replay inside a
@@ -11,17 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tests pin the pack to the batch twins on testdata — the stream side
   * must reproduce the batch operators' rows, not merely run.
   */
-class StreamQueryPackSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StreamQueryPackSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -3,10 +3,8 @@ package graft
 import graft.detectors.Bocpd
 import graft.streaming.StreamingDetectors
 import graft.streaming.StreamingDetectors.{Doc, Point}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
@@ -17,17 +15,7 @@ import java.sql.Timestamp
   * the stateful recurrences to their batch twins across microbatch
   * boundaries, where state handoff bugs live.
   */
-class StreamingReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StreamingReplaySpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
   private val S = TSSchema(keys = Seq("event_type"))

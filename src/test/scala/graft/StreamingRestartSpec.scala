@@ -2,10 +2,9 @@ package graft
 
 import graft.streaming.StreamingDetectors
 import graft.streaming.StreamingDetectors.{Doc, Point}
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
@@ -18,17 +17,7 @@ import java.sql.Timestamp
   * (The memory sink refuses checkpoint recovery, so output goes through
   * the fault-tolerant parquet file sink — the production shape anyway.)
   */
-class StreamingRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StreamingRestartSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
   private val S = TSSchema(keys = Seq("event_type"))

@@ -1,14 +1,12 @@
 package graft
 
 import graft.expressions.{ewm_array, EwmArray}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[graft.expressions.EwmArray]] against direct simulations of the pandas
@@ -16,16 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (kats/models/nowcasting/feature_extraction.py), plus the MACD chain
   * end-to-end through the DataFrame API.
   */
-class TechSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TechSpec extends AnyFunSuite with SparkSuite {
 
   /** pandas ewm(alpha, min_periods, adjust).mean() over a NaN-marked array,
     * NaN-skip semantics (the reference `_ewma` compaction): explicit

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** text/TextRank: the capped driver fast path and the distributed
@@ -9,16 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * recurrence makes summation order irrelevant), and driver state must
   * stay bounded — the round-8 verdict's one remaining scale flag.
   */
-class TextRankSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TextRankSpec extends AnyFunSuite with SparkSuite {
 
   test("driver fast path == distributed rounds, bit for bit") {
     import spark.implicits._

@@ -10,7 +10,7 @@ Usage:
 
 Pass/fail rule per query: p50 > max(2 * baseline, baseline + 0.75s)
 (the absolute floor keeps sub-second queries from failing on scheduler
-jitter). Violators get a fresh 3x filtered Bench (java direct, no sbt)
+jitter). Violators get a fresh 3x filtered Bench (tools/run_java.sh, no sbt)
 and are judged on that controlled p50.
 """
 import json
@@ -22,7 +22,9 @@ import sys
 import time
 
 SF_DIR = "/root/testdata/sf0.1"
-BENCH_CMD = ["java", "-Xmx100g", "-cp", "target/scala-2.13/classes:/opt/spark/jars/*",
+# tools/run_java.sh carries the JDK 17 --add-opens flags and the heap
+# default (SPARK_DRIVER_MEM, else 8g) that every graft launch shares.
+BENCH_CMD = [os.path.join(os.path.dirname(os.path.abspath(__file__)), "run_java.sh"),
              "graft.Bench"]
 
 
