@@ -18,9 +18,10 @@ import org.apache.spark.sql.SparkSession
   * There is no global AQE partition-size pin. r12's
   * `coalescePartitions.minPartitionSize=1k` protected a few CPU-dense
   * kernel stages from size-based coalescing but denied coalescing to all
-  * 423 queries (+18% driver total, VERDICT r12 #4). The kernel stages pin
-  * their own parallelism via `SeriesOps.spread` (REPARTITION_BY_NUM is
-  * never coalesced); everything else coalesces normally.
+  * 423 queries (+18% driver total, VERDICT r12 #4). Series data is pinned
+  * where it is clustered: `SeriesOps.spread` (REPARTITION_BY_NUM, never
+  * coalesced) at the series source in `TS.resample`, and at the kernel
+  * boundary for inputs from elsewhere; everything else coalesces normally.
   *
   * An event log for offline stage attribution needs no graft knob: pass
   * the standard `-Dspark.eventLog.enabled=true -Dspark.eventLog.dir=…`

@@ -7,40 +7,49 @@ import org.apache.spark.sql.functions._
   * series (Holt-Winters, BOCPD, PACF, spectral entropy, …).
   *
   * Pattern: `groupBy(keys).agg(sort_array(collect_list(struct(ts, value))))`
-  * — a single shuffle keyed by series; each post-shuffle row holds exactly
-  * one series' points. The scale axis is the NUMBER of series (millions at
-  * 100 TB), never total points, and a series' own points are bounded (a year
-  * of hourly data is 8 760 doubles ≈ 70 KB), so rows stay small. The scalar
-  * UDFs applied afterwards run once per series, i.e. after a ~10³–10⁶×
-  * reduction — the non-codegen cost is negligible relative to the scan.
+  * over a relation clustered by the series keys; each post-shuffle row
+  * holds exactly one series' points. On a series that comes from
+  * [[TS.resample]] (so from [[Tables.hourlyEvents]] and
+  * [[Tables.denseHourly]]) the clustering is the resample's own exchange,
+  * and the whole pipeline, collect included, pays that one shuffle; any
+  * other input is clustered here by [[spread]]. The scale axis is the
+  * NUMBER of series (millions at 100 TB), never total points, and a
+  * series' own points are bounded (a year of hourly data is 8 760 doubles
+  * ≈ 70 KB), so rows stay small. The scalar UDFs applied afterwards run
+  * once per series, i.e. after a ~10³–10⁶× reduction — the non-codegen
+  * cost is negligible relative to the scan.
   */
 object SeriesOps {
 
-  /** Pin full-machine parallelism for a CPU-dense keyed kernel stage.
+  /** Cluster rows by the series keys at full-machine parallelism: a
+    * repartition-by-num (shuffleOrigin REPARTITION_BY_NUM, which AQE never
+    * coalesces) into 2 × defaultParallelism partitions.
     *
-    * AQE's size-based partition coalescing treats post-shuffle BYTES as
-    * the cost proxy; a per-series/per-pair kernel stage carries tiny
-    * bytes but heavy CPU, so coalescing serializes it (measured r12: a
-    * 500-series STOMP 47 s vs 4.9 s). r12 countered with a GLOBAL
-    * `coalescePartitions.minPartitionSize=1k` pin in Bench/Verify, which
-    * denied coalescing to all 423 queries and cost the suite +18%
-    * (VERDICT r12 #4) — so r13 scopes the fix to the kernel boundary:
-    * an explicit repartition-by-num (shuffleOrigin REPARTITION_BY_NUM,
-    * which AQE never coalesces) keyed on the kernel's grouping columns.
-    * The following groupBy on the same keys reuses this partitioning, so
-    * the exchange count is unchanged — only the coalescibility of the
-    * kernel stage is. Partition count = 2×defaultParallelism, for two
-    * load-bearing reasons: (1) EnsureRequirements ELIDES a user
-    * repartition whose child is already hash-partitioned by the same
-    * keys at the same count (measured r13: q_matrix_profile's dense-grid
-    * input arrives hashpartitioned(event_type, 32), so a spread at
-    * defaultParallelism disappeared from the plan and the kernel stage
-    * fell back behind a coalescible exchange — the exact stage the
-    * 500-series STOMP measurement caught at 47 s). 2× never equals the
-    * session shuffle partition count here, so the exchange survives.
+    * Why: AQE coalesces by post-shuffle BYTES, and a per-series kernel
+    * stage carries few bytes but heavy CPU, so coalescing serializes it
+    * (measured r12: a 500-series STOMP 47 s vs 4.9 s). A global
+    * `coalescePartitions.minPartitionSize` pin denied coalescing to all
+    * 423 queries (+18%, VERDICT r12 #4), so the pin is scoped to series
+    * data.
+    *
+    * Where it sits: at the bottom of the series pipeline, in
+    * [[TS.resample]] before the hourly aggregate, so the aggregate, the
+    * windows by series, [[TS.fillGaps]] and [[collect]] share one exchange.
+    * [[collect]] applies it again at the kernel boundary for inputs that do
+    * not come from that source. On an input that is already spread,
+    * EnsureRequirements elides that second exchange, because it asks for
+    * the same keys at the same count: the kernel stage runs in the
+    * resample's partitions, which AQE cannot coalesce either.
+    *
+    * Why 2 × defaultParallelism: (1) it never equals the session's
+    * shuffle partition count (the core count), so a spread is never elided
+    * behind an ordinary coalescible hashpartitioning(keys, n) exchange
+    * (measured r13: q_matrix_profile's input arrived
+    * hashpartitioned(event_type, 32), a spread at defaultParallelism
+    * disappeared and the kernel stage fell back to the 47 s shape).
     * (2) Per-series kernel costs are uneven (series length skew); two
-    * waves per core is standard straggler insurance for a compute-bound
-    * stage (guide §2.5-2.6).
+    * waves per core is straggler insurance for a compute-bound stage
+    * (guide §2.5-2.6).
     */
   def spread(df: DataFrame, keys: Seq[Column]): DataFrame =
     if (keys.isEmpty) df

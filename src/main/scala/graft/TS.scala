@@ -22,28 +22,46 @@ object TS {
 
   /** Align an irregular event stream onto a fixed grid (kats consts.py
     * interpolate/resample): truncate ts to `unit` and aggregate values.
+    *
+    * The rows are spread by the series keys ([[SeriesOps.spread]]) before
+    * the aggregate, so this is the one series-keyed exchange of a series
+    * pipeline: the aggregate, every window partitioned by the keys, the
+    * dense grid of [[fillGaps]] and [[SeriesOps.collect]] all run in its
+    * partitions with no further shuffle. The price is that the sum is no
+    * longer partially aggregated map-side: the raw rows cross the
+    * exchange, not one partial per (key, bucket) and scan task.
     */
   def resample(df: DataFrame, s: TSSchema, unit: String = "hour"): DataFrame =
-    df.groupBy((s.keyCols :+ date_trunc(unit, col(s.ts)).as(s.ts)): _*)
+    SeriesOps.spread(df, s.keyCols)
+      .groupBy((s.keyCols :+ date_trunc(unit, col(s.ts)).as(s.ts)): _*)
       .agg(round(sum(s.value), 6).as(s.value), count(lit(1)).as("n"))
 
-  /** Densify: per series, generate every grid point between its min and max
-    * ts and left-join observations, filling holes with `fill` (null if None).
-    * Grid generation is per-key `sequence()` + `explode` — distributed, no
-    * driver-side loop; at 100 TB the explode parallelizes with the keys.
+  /** Densify: per series, every grid point from its first to its last ts,
+    * holes filled with `fill` (null if None), in one window pass keyed by
+    * series: each row expands to itself plus the missing points up to the
+    * next row's ts. The observed row keeps its columns; a filled point has
+    * `fill` as value and null in every other non-key column. Rows with a
+    * null ts are dropped.
+    *
+    * Precondition: the ts of a series lie on one grid of `stepSeconds`
+    * (e.g. `date_trunc`'d hours at 3600 s), as [[resample]]'s output does.
+    * Off-grid points are kept as they are, not snapped onto the grid.
     */
   def fillGaps(df: DataFrame, s: TSSchema, stepSeconds: Long, fill: Option[Double] = Some(0.0)): DataFrame = {
-    val grid = df
-      .groupBy(s.keyCols: _*)
-      .agg(min(col(s.ts)).as("_t0"), max(col(s.ts)).as("_t1"))
-      .select((s.keyCols :+ explode(
-        sequence(col("_t0"), col("_t1"), expr(s"interval $stepSeconds seconds"))
-      ).as(s.ts)): _*)
-    val joined = grid.join(df, s.keys :+ s.ts, "left")
-    fill match {
-      case Some(v) => joined.withColumn(s.value, coalesce(col(s.value), lit(v)))
-      case None    => joined
+    val step = expr(s"interval $stepSeconds seconds")
+    val t = col(s.ts)
+    val rest = df.columns.filterNot(c => s.keys.contains(c) || c == s.ts)
+    // greatest skips the null `_next` of each series' last row, and keeps
+    // `sequence` from running backwards on a repeated ts
+    val points = sequence(t, greatest(t, col("_next") - step), step)
+    val observed = col("_i") === 0
+    val restCols = rest.map { c =>
+      val v = when(observed, col(c))
+      (if (c == s.value) fill.fold(v)(f => coalesce(v, lit(f))) else v).as(c)
     }
+    df.withColumn("_next", lead(t, 1).over(s.orderedWindow))
+      .select((s.keyCols ++ rest.map(col)) :+ posexplode(points).as(Seq("_i", s.ts)): _*)
+      .select((s.keyCols :+ t) ++ restCols: _*)
   }
 
   /** Linear interpolation of missing grid values (kats TimeSeriesData

@@ -1369,10 +1369,7 @@ object AnalysisQueries {
 
     "q_holtwinters_mul" ->
       s"""WITH RECURSIVE hourly AS ($H),
-         |b0 AS (SELECT event_type, min(ts) t0, max(ts) t1 FROM hourly GROUP BY 1),
-         |grid AS (SELECT event_type, unnest(generate_series(t0, t1, INTERVAL 1 HOUR)) AS ts FROM b0),
-         |dense AS (SELECT g.event_type, g.ts, coalesce(h.value, 0.0) AS value
-         |          FROM grid g LEFT JOIN hourly h ON g.event_type = h.event_type AND g.ts = h.ts),
+         |${Tables.denseHourlySql},
          |ord AS (SELECT event_type, value,
          |  row_number() OVER (PARTITION BY event_type ORDER BY ts) - 1 AS t,
          |  count(*) OVER (PARTITION BY event_type) AS n FROM dense),

@@ -238,10 +238,8 @@ object CoreQueries {
 
     "q_fill_gaps" ->
       s"""WITH hourly AS ($H),
-         |b AS (SELECT event_type, min(ts) t0, max(ts) t1 FROM hourly GROUP BY 1),
-         |grid AS (SELECT event_type, unnest(generate_series(t0, t1, INTERVAL 1 HOUR)) AS ts FROM b)
-         |SELECT g.event_type, epoch_us(g.ts)//1000000 AS ts_s, coalesce(h.value, 0.0) AS value
-         |FROM grid g LEFT JOIN hourly h ON g.event_type = h.event_type AND g.ts = h.ts""".stripMargin,
+         |${Tables.denseHourlySql}
+         |SELECT event_type, epoch_us(ts)//1000000 AS ts_s, value FROM dense""".stripMargin,
 
     "q_interpolate_linear" ->
       s"""WITH hourly AS ($H),

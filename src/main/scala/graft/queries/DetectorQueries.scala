@@ -15,11 +15,6 @@ object DetectorQueries {
   private val S = TSSchema(keys = Seq("event_type"))
   private def hourly(s: SparkSession, dir: String) = Tables.hourlyEvents(s, dir).drop("n")
   private val H = Tables.hourlySql
-  private val DenseSql =
-    """b AS (SELECT event_type, min(ts) t0, max(ts) t1 FROM hourly GROUP BY 1),
-      |grid AS (SELECT event_type, unnest(generate_series(t0, t1, INTERVAL 1 HOUR)) AS ts FROM b),
-      |dense AS (SELECT g.event_type, g.ts, coalesce(h.value, 0.0) AS value
-      |          FROM grid g LEFT JOIN hourly h ON g.event_type = h.event_type AND g.ts = h.ts)""".stripMargin
   private def epochS(c: String, as: String = "ts_s") = unix_timestamp(col(c)).as(as)
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -275,7 +270,7 @@ object DetectorQueries {
     * q_feat_bocp (thresholded per-series feature aggregate). */
   private[queries] lazy val bocpdProbsSql: String =
     s"""WITH RECURSIVE hourly AS ($H),
-         |$DenseSql,
+         |${Tables.denseHourlySql},
          |ord AS (SELECT event_type, ts, value,
          |  row_number() OVER (PARTITION BY event_type ORDER BY ts) - 1 AS t,
          |  count(*) OVER (PARTITION BY event_type) AS n FROM dense),
@@ -357,7 +352,7 @@ object DetectorQueries {
     // closed-form 2×2 ridge posterior gives the Normal predictive
     "q_bocpd_trend" ->
       s"""WITH RECURSIVE hourly AS ($H),
-         |$DenseSql,
+         |${Tables.denseHourlySql},
          |ord AS (SELECT event_type, ts, value,
          |  row_number() OVER (PARTITION BY event_type ORDER BY ts) - 1 AS t,
          |  count(*) OVER (PARTITION BY event_type) AS n FROM dense),
@@ -479,7 +474,7 @@ object DetectorQueries {
     // dominant period + its share of total power
     "q_seasonality_fft" ->
       s"""WITH hourly AS ($H),
-         |$DenseSql,
+         |${Tables.denseHourlySql},
          |ord AS (SELECT event_type, value,
          |  row_number() OVER (PARTITION BY event_type ORDER BY ts) - 1 AS t,
          |  count(*) OVER (PARTITION BY event_type) AS n,
@@ -673,7 +668,7 @@ object DetectorQueries {
 
     "q_seasonality_acf" ->
       s"""WITH hourly AS ($H),
-         |$DenseSql,
+         |${Tables.denseHourlySql},
          |base AS (SELECT event_type, ts, value,
          |  value - avg(value) OVER (PARTITION BY event_type) AS dev,
          |  count(*) OVER (PARTITION BY event_type) AS n

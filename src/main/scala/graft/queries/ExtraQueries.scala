@@ -158,10 +158,7 @@ object ExtraQueries {
     val w = 24
     val inf = Double.MaxValue / 4
     s"""WITH RECURSIVE hourly AS ($H),
-       |db AS (SELECT event_type, min(ts) t0, max(ts) t1 FROM hourly GROUP BY 1),
-       |dgrid AS (SELECT event_type, unnest(generate_series(t0, t1, INTERVAL 1 HOUR)) AS ts FROM db),
-       |dense AS (SELECT g.event_type, g.ts, coalesce(h.value, 0.0) AS value
-       |          FROM dgrid g LEFT JOIN hourly h ON g.event_type = h.event_type AND g.ts = h.ts),
+       |${Tables.denseHourlySql},
        |ord AS (SELECT event_type, value,
        |  row_number() OVER (PARTITION BY event_type ORDER BY ts) - 1 AS t,
        |  count(*) OVER (PARTITION BY event_type) AS n FROM dense),

@@ -188,10 +188,11 @@ object StreamQueries {
       .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b.event_type))
   }
 
-  /** Run a started streaming query over a chunked feed and return the
-    * memory-sink table (stable after stop — the sink buffer backs the
-    * temp view). `tail` lets callers append a watermark-advancing
-    * sentinel after the real data.
+  /** Run a streaming query over a chunked feed and return the memory
+    * sink's rows as a local relation. The sink's temp view is dropped, so
+    * neither the view nor its buffered rows outlive the replay. Each
+    * non-empty `tail` is one more microbatch after the feed: a
+    * watermark-advancing sentinel, or late duplicates.
     *
     * The state store inherits spark.sql.shuffle.partitions at query
     * start; at replay feed sizes (≤100k rows) 32 state partitions × 6+
@@ -202,17 +203,16 @@ object StreamQueries {
     * setting.
     */
   private def replay[T](s: SparkSession, mem: MemoryStream[T], out: DataFrame,
-                        name: String, feed: Seq[T], tail: Seq[T] = Nil): DataFrame = {
+                        name: String, feed: Seq[T], tail: Seq[T]*): DataFrame = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", "4")
     try {
       val (q, ck) = startMem(out, name)
       try {
-        chunks(feed, 5).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-        if (tail.nonEmpty) { mem.addData(tail: _*); q.processAllAvailable() }
+        (chunks(feed, 5) ++ tail.filter(_.nonEmpty)).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
       } finally { q.stop(); dropCkpt(s, ck) }
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    s.table(name)
+    try localize(s, s.table(name)) finally s.catalog.dropTempView(name)
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -483,20 +483,8 @@ object StreamQueries {
       val dupB = uniq.zipWithIndex.collect { case (d, i) if i % 14 == 0 =>
         d.copy(doc_id = d.doc_id + 2000000L) }
       val mem = MemoryStream[StreamingDetectors.Doc]
-      val out = StreamingDetectors.dedupExact(mem.toDF())
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val name =
-        try {
-          val (q, ck) = startMem(out, sink("dedup"))
-          try {
-            chunks(uniq, 5).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-            mem.addData(dupA: _*); q.processAllAvailable()
-            mem.addData(dupB: _*); q.processAllAvailable()
-          } finally { q.stop(); dropCkpt(s, ck) }
-          q.name
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(name).select("doc_id")
+      replay(s, mem, StreamingDetectors.dedupExact(mem.toDF()), sink("dedup"), uniq, dupA, dupB)
+        .select("doc_id")
     }),
 
     // Watermarked tumbling-window resample as a stream: every raw event
@@ -765,19 +753,7 @@ object StreamQueries {
         .where(!col("maybe_dup") || col("in_corpus").isNull)
         .select("doc_id", "ts", "text")
       val deduped = StreamingDetectors.dedupExact(survivors)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val name =
-        try {
-          val (q, ck) = startMem(deduped.select("doc_id"), sink("ingest"))
-          try {
-            chunks(feed, 5).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-            mem.addData(dupC: _*); q.processAllAvailable()
-            mem.addData(dupS: _*); q.processAllAvailable()
-          } finally { q.stop(); dropCkpt(s, ck) }
-          q.name
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(name)
+      replay(s, mem, deduped.select("doc_id"), sink("ingest"), feed, dupC, dupS)
     }),
 
     // Bloom-gated exact dedup as a stream: the corpus fingerprint bloom

@@ -3,22 +3,27 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The queries that persist intermediates for iterative fitting must not
-  * leak cached blocks past their own construction: in a long-lived
-  * session (or the 100+-query bench) leaked caches accumulate until they
-  * evict working memory. Runs each offender end-to-end and asserts the
-  * persistence registry is empty afterwards.
+  * leak cached blocks past their own construction, and a stream replay
+  * must not leave its memory-sink view (and the rows behind it): in a
+  * long-lived session (or the 100+-query bench) leaks accumulate until
+  * they evict working memory. Runs each offender end-to-end and asserts
+  * the persistence registry and the catalog are clean afterwards.
   */
 class PersistHygieneSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  test("q_kmeans, q_ann_ivf and the PQ queries leave no cached blocks behind") {
-    for (q <- Seq("q_kmeans", "q_ann_ivf", "q_ann_pq", "q_ann_pq_rerank", "q_ann_ivfpq")) {
+  test("the fitting queries and the replays leave no cached blocks or sink views behind") {
+    // q_stream_resample is a stateful (watermarked window) replay
+    for (q <- Seq("q_kmeans", "q_ann_ivf", "q_ann_pq", "q_ann_pq_rerank", "q_ann_ivfpq",
+                  "q_stream_zscore", "q_stream_resample")) {
       val n = SparkEntry.queries(q)(spark, sf).count()
       assert(n > 0, s"$q returned no rows")
       val leaked = spark.sparkContext.getPersistentRDDs
       assert(leaked.isEmpty,
         s"$q leaked ${leaked.size} cached RDD(s): ${leaked.values.map(_.name).mkString(", ")}")
+      val views = spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("gsq_"))
+      assert(views.isEmpty, s"$q left its memory-sink view(s) behind: ${views.mkString(", ")}")
     }
   }
 

@@ -343,12 +343,15 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
       val p = planOf(q)
       assert(!p.contains("CartesianProduct"), s"$q plans a CartesianProduct:\n$p")
     }
-    // the huber kernel is the hourly resample + ONE series-keyed
-    // collect: two exchanges, no joins
-    val hb = planOf("q_huber")
-    assert(!hb.contains("Join"), s"q_huber grew a join:\n$hb")
-    assert("Exchange hashpartitioning".r.findAllIn(hb).size <= 2,
-      s"q_huber shuffles more than hourly + series keys:\n$hb")
+    // the hourly series pipelines pay ONE series-keyed exchange, the
+    // resample's spread: the hourly aggregate, the dense grid and the
+    // kernel's collect all run in its partitions, and the grid needs no join
+    Seq("q_huber", "q_cusum", "q_arima", "q_bocpd", "q_fill_gaps", "q_holtwinters").foreach { q =>
+      val p = planOf(q)
+      assert("Exchange hashpartitioning\\(event_type".r.findAllIn(p).size == 1,
+        s"$q should shuffle exactly once, by series:\n$p")
+      assert(!p.contains("Join") && !p.contains("BroadcastExchange"), s"$q grew a join:\n$p")
+    }
   }
 
   test("monitoring + spectral pack plans keep their scale shape") {
