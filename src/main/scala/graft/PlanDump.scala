@@ -31,6 +31,7 @@ object PlanDump {
             case e: Throwable => System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
           }
           spark.sqlContext.clearCache()
+          Scratch.sweep()
       }
     }
     spark.stop()

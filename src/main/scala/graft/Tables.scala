@@ -62,9 +62,7 @@ object Tables {
     val bytes =
       try new java.io.File(path).length()
       catch { case _: Throwable => Long.MaxValue }
-    val maxSplit = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-      .stripSuffix("b").trim match { case s => try s.toLong catch { case _: Throwable => 134217728L } }
-    if (spread && bytes >= RespreadMinBytes && bytes < maxSplit)
+    if (spread && bytes >= RespreadMinBytes && bytes < spark.sessionState.conf.filesMaxPartitionBytes)
       df.repartition(spark.sparkContext.defaultParallelism)
     else df
   }

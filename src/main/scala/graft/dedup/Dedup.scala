@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.Scratch
 import graft.text.TextFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -200,6 +201,9 @@ object Dedup {
       .select(col("i"), col("j"), round(est, 6).as("est_jaccard"))
   }
 
+  /** Round cap of connectedComponents' distributed loop. */
+  private val CcMaxIter = 50
+
   /** Connected components over an undirected edge list `(i, j)` by
     * min-label propagation: every node's label converges to the smallest
     * id reachable from it — the canonical "collapse near-dup pairs into
@@ -213,33 +217,15 @@ object Dedup {
     * path-compression join; dedup graphs are unions of near-cliques from
     * banded LSH candidates, so a handful of rounds converges.
     *
-    * Materialization contract: the symmetric edge list and each round's
-    * labels are written as parquet under `scratchDir` (caller-supplied) —
-    * falling back to `SparkContext.getCheckpointDir`, then to a
-    * driver-local temp dir that is only correct in local mode, where the
-    * driver and executors share one filesystem. On a multi-node cluster
-    * pass a shared path (or `sc.setCheckpointDir`) — per-round parquet on
-    * a shared store is exactly the GraphFrames-CC checkpointing shape.
-    * The edge-list and stale-round files are deleted before returning;
-    * the FINAL labels parquet is what the returned DataFrame reads, so it
-    * must outlive the caller's terminal action — the whole scratch
-    * subtree is registered for deletion when the filesystem closes at JVM
-    * exit (`FileSystem.deleteOnExit`). Callers wanting eager cleanup can
-    * materialize the result and delete `scratchDir` themselves.
+    * The symmetric edge list and the per-round labels are parquet in one
+    * [[Scratch.dir]], which [[Scratch.sweep]] removes at the query
+    * boundary; see [[Scratch]] for where it lives.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50,
-                          driverFastPathEdges: Long = 1000000L,
-                          scratchDir: Option[String] = None): DataFrame = {
+  def connectedComponents(edges: DataFrame,
+                          driverFastPathEdges: Long = 1000000L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val base = scratchDir
-      .orElse(spark.sparkContext.getCheckpointDir)
-      .getOrElse("file:" + java.nio.file.Files.createTempDirectory("graft_cc").toString)
-    val dir = base.stripSuffix("/") + "/graft_cc_" + java.util.UUID.randomUUID().toString
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.deleteOnExit(root)
-    def drop(sub: String): Unit = fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$sub"), true)
+    val dir = Scratch.dir(spark, "cc")
     // The edge derivation — possibly an expensive LSH pipeline — runs
     // exactly ONCE, at this parquet write; everything after reads the
     // materialized symmetric edge list.
@@ -276,7 +262,6 @@ object Dedup {
         if (a != b) { if (a < b) parent(b) = a else parent(a) = b } // union by min id
       }
       val labeled = nodes.toSeq.map(u => (u, find(u)))
-      fs.delete(root, true) // driver now owns the result; remove the whole scratch subtree
       // union-by-min-id + full path compression → root IS the component min
       labeled.toDF("u", "label")
     } else {
@@ -300,7 +285,7 @@ object Dedup {
       var prevSum: java.math.BigDecimal = null
       var it = 0
       var converged = false
-      while (!converged && it < maxIter) {
+      while (!converged && it < CcMaxIter) {
         // checkpoint EVERY round: the compression self-join doubles plan
         // size per round, so unmaterialized lineage would grow
         // exponentially; a per-round parquet round-trip keeps every round
@@ -318,10 +303,6 @@ object Dedup {
         labels = round
         it += 1
       }
-      // the returned frame reads only the final round's parquet; the edge
-      // list and the stale alternate round are dead weight — drop them now
-      drop("sym")
-      drop(s"labels_${it % 2}")
       labels
     }
   }

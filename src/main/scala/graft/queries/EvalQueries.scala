@@ -78,9 +78,7 @@ object EvalQueries {
       // the full persistence loop: fit → save → load → forecast WITHOUT
       // refit — the oracle fits directly, so the round trip must be exact
       import graft.models.ModelStore
-      // per-invocation temp dir: two concurrent runs (verify + bench)
-      // must not overwrite each other's store mid-read
-      val path = java.nio.file.Files.createTempDirectory("graft_modelstore").toString
+      val path = Scratch.dir(s, "modelstore")
       ModelStore.save(ModelStore.fitBattery(Tables.hourlyEvents(s, dir).drop("n"), S), path)
       ModelStore.forecast(ModelStore.load(s, path), Seq("event_type"), steps = 24)
         .select(col("event_type"), col("model"), col("h"), round(col("fcst"), 6).as("fcst"))
@@ -199,7 +197,7 @@ object EvalQueries {
       // refits directly, so the store round trip must be exact.
       import graft.detectors.DetectorStore
       import graft.models.ModelStore
-      val path = java.nio.file.Files.createTempDirectory("graft_detserve").toString
+      val path = Scratch.dir(s, "detserve")
       val w = Window.partitionBy("event_type").orderBy("ts")
       val wk = Window.partitionBy("event_type")
       val base = Tables.hourlyEvents(s, dir).drop("n")
@@ -225,7 +223,7 @@ object EvalQueries {
       // priors), oracle-checked through the parquet round trip
       import graft.detectors.DetectorStore
       import graft.models.ModelStore
-      val path = java.nio.file.Files.createTempDirectory("graft_detectorstore").toString
+      val path = Scratch.dir(s, "detectorstore")
       ModelStore.save(DetectorStore.fitBaselines(Tables.hourlyEvents(s, dir).drop("n"), S), path)
       ModelStore.load(s, path)
         .select(col("event_type"), col("model"), col("param"), round(col("value"), 6).as("value"))

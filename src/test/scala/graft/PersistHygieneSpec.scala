@@ -1,13 +1,18 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** The queries that persist intermediates for iterative fitting must not
   * leak cached blocks past their own construction, and a stream replay
   * must not leave its memory-sink view (and the rows behind it): in a
   * long-lived session (or the 100+-query bench) leaks accumulate until
   * they evict working memory. Runs each offender end-to-end and asserts
-  * the persistence registry and the catalog are clean afterwards.
+  * the persistence registry and the catalog are clean afterwards. The
+  * same holds on disk: every scratch dir sits under the one `Scratch`
+  * root and is gone after `Scratch.sweep`.
   */
 class PersistHygieneSpec extends AnyFunSuite with SparkSuite {
 
@@ -46,6 +51,69 @@ class PersistHygieneSpec extends AnyFunSuite with SparkSuite {
     assert(fs.exists(dir))
     Scratch.sweep()
     assert(!fs.exists(dir), s"$dir survived the sweep")
+  }
+
+  test("with no checkpoint dir, materialize calls share one root and the sweep removes their dirs") {
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    val dirs = Seq("a", "b").map(t =>
+      new Path(Scratch.materialize(spark.range(3).toDF("x"), s"share$t").inputFiles.head).getParent)
+    val roots = dirs.map(d => path(d.getParent.toString)).distinct
+    assert(roots.size == 1, s"two materializations, two roots: ${roots.mkString(", ")}")
+    assert(dirs.forall(fs.exists))
+    Scratch.sweep()
+    dirs.foreach(d => assert(!fs.exists(d), s"$d survived the sweep"))
+  }
+
+  test("connectedComponents' distributed path leaves nothing after the sweep") {
+    import spark.implicits._
+    val root = scratchRoot()
+    val before = fs.listStatus(root).map(_.getPath).toSet
+    val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("i", "j")
+    val cc = graft.dedup.Dedup.connectedComponents(edges, driverFastPathEdges = 0)
+    assert(cc.collect().length == 5)
+    // the result reads the final round: <cc dir>/labels_k/part-*
+    val ccDir = new Path(cc.inputFiles.head).getParent.getParent
+    assert(path(ccDir.getParent.toString) == path(root.toString), s"$ccDir is not under the Scratch root $root")
+    Scratch.sweep()
+    assert(!fs.exists(ccDir), s"$ccDir survived the sweep")
+    assert(fs.listStatus(root).map(_.getPath).toSet == before)
+  }
+
+  test("the store queries keep their store under the Scratch root until the sweep") {
+    val root = path(scratchRoot().toString) + "/"
+    for (q <- Seq("q_model_persist", "q_detector_serve", "q_detector_persist")) {
+      val df = SparkEntry.queries(q)(spark, sf)
+      assert(df.count() > 0, s"$q returned no rows")
+      val stores = df.inputFiles.map(path).filter(_.startsWith(root))
+        .map(f => new Path(root + f.stripPrefix(root).takeWhile(_ != '/'))).distinct
+      assert(stores.nonEmpty, s"$q reads no store under the Scratch root $root: ${df.inputFiles.mkString(", ")}")
+      Scratch.sweep()
+      stores.foreach(d => assert(!fs.exists(d), s"$q's store $d survived the sweep"))
+    }
+  }
+
+  test("in src/main, only Scratch.scala makes temp dirs or registers exit deletion") {
+    val main = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(main), s"run from the repository root: no $main")
+    val offenders = java.nio.file.Files.walk(main).iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") && !f.endsWith("graft/Scratch.scala"))
+      .filter { f =>
+        val text = java.nio.file.Files.readString(f)
+        text.contains("createTempDirectory") || text.contains("deleteOnExit")
+      }.toSeq
+    assert(offenders.isEmpty, s"scratch directory logic outside Scratch: ${offenders.mkString(", ")}")
+  }
+
+  private def fs = new Path("file:/").getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** A local path without its scheme: inputFiles say file:///x, Path says file:/x. */
+  private def path(s: String): String = new Path(s).toUri.getPath
+
+  /** The Scratch root: the parent of every dir Scratch hands out. */
+  private def scratchRoot(): Path = {
+    val probe = new Path(Scratch.materialize(spark.range(1).toDF("x"), "probe").inputFiles.head).getParent
+    Scratch.sweep()
+    probe.getParent
   }
 
   test("replay checkpoints stay under the session's checkpoint dir and are removed") {
